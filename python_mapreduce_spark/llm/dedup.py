@@ -24,7 +24,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from python_mapreduce_spark.functions.scalar import dround, tokenize
@@ -468,23 +468,21 @@ def band_keys(
     representation of a MinHash signature. Band key = xxhash64(band_id,
     slice of signature): two docs share a (band, bkey) iff they agree on
     every row of that band. This is also the dedup STATE format:
-    ``bands`` longs per doc, independent of document size."""
-    return signatures.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bi).alias("band"),
-                        F.xxhash64(
-                            F.lit(bi), F.concat_ws(",", F.slice("sig", bi * rows + 1, rows))
-                        ).alias("bkey"),
-                    )
-                    for bi in range(bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("id", "bk.band", "bk.bkey")
+    ``bands`` longs per doc, independent of document size.
+
+    One generator (explode the int band ids) feeds one key expression, so
+    the plan size does not depend on ``bands``. The band id stays an
+    ``int`` and the sliced string is unchanged, so the keys are
+    bit-identical to hashing ``lit(band)`` per band — persisted state
+    stays valid.
+    """
+    per_band = signatures.select(
+        "id", "sig", F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("band")
+    )
+    band_slice = F.slice("sig", F.col("band") * rows + 1, rows)
+    return per_band.select(
+        "id", "band", F.xxhash64("band", F.concat_ws(",", band_slice)).alias("bkey")
+    )
 
 
 def lsh_candidate_pairs(
@@ -570,63 +568,74 @@ def connected_components(
     joins. Per round: one shuffle join + one min-agg, both map-side
     combined; labels are localCheckpoint'ed to truncate lineage (an
     iterative driver loop over lazy plans otherwise re-executes every
-    prior round each time). Deterministic: min() over ids.
+    prior round each time). Deterministic: min() over ids. Each round's
+    jobs carry ``connected_components round <i>`` as their call site
+    (stage names in the event log and UI).
 
     Returns (node, cluster) where cluster = smallest node id in the
-    component. Raises if not converged within ``max_iter`` (diameter
-    bound, not data size — 25 handles any realistic dup graph).
+    component. Raises if not converged within ``max_iter`` rounds
+    (diameter bound, not data size — 25 handles any realistic dup
+    graph), naming the rounds run and the labels still changing.
     """
     # checkpoint sym too: otherwise every round's neighbor join re-runs
     # the full upstream edge plan (for near-dup graphs that is the whole
-    # MinHash LSH pipeline, twice per iteration).
+    # MinHash LSH pipeline). Both directions come from one explode rather
+    # than a union, so that plan is optimized and executed once, not twice.
     sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .localCheckpoint(eager=True)
-    )
-    labels = (
-        sym.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_iter):
-        nbr_min = (
-            sym.join(labels, sym.a == labels.node)
-            .groupBy("b")
-            .agg(F.min("label").alias("nbr_label"))
+        edges.select(
+            F.explode(
+                F.array(
+                    F.struct(F.col(src).alias("a"), F.col(dst).alias("b")),
+                    F.struct(F.col(dst).alias("a"), F.col(src).alias("b")),
+                )
+            ).alias("e")
         )
-        # Change flag rides the SAME materialization as the labels
-        # (min-propagation is monotone, so changed <=> new < old): the
-        # convergence probe becomes an any() scan of the checkpointed
-        # frame instead of a full new-vs-old join job per round —
-        # measured at sf0.1 (round 10, same-host A/B): q_dedup_clusters
-        # 3.32 -> 2.90 s, q_cluster_split 4.37 -> 4.06 s.
-        # A fused single-agg variant (min over neighbors ∪ own-label
-        # rows, old label via min(when(own)) in the same pass, no
-        # join-back) was prototyped round 10 and REJECTED on
-        # measurement: q_dedup_clusters 3.34 -> 3.97 s, q_cluster_split
-        # 4.40 -> 5.65 s same-host best-of-3 — the join-back is a cheap
-        # node-sized broadcast while the fused agg loses the cheap
-        # count-combine shape (wider rows, two agg buffers).
-        new = (
-            labels.join(nbr_min, labels.node == nbr_min.b, "left")
-            .select(
-                "node",
-                F.col("label").alias("__old"),
-                F.least(
-                    F.col("label"), F.coalesce("nbr_label", F.col("label"))
-                ).alias("label"),
+        .select("e.a", "e.b")
+        .localCheckpoint(eager=True)
+    )
+    # Seeding the labels with one propagation step (one agg, no checkpoint)
+    # saves a round, and observing each round's change count on its own
+    # eager checkpoint job saves the separate probe job every round paid.
+    labels = sym.groupBy("a").agg(
+        F.least(F.col("a"), F.min("b")).alias("label")
+    ).withColumnRenamed("a", "node")
+    sc = edges.sparkSession.sparkContext
+    caller_site = sc.getLocalProperty("callSite.short")
+    changed = 0
+    try:
+        for rnd in range(1, max_iter + 1):
+            sc.setLocalProperty("callSite.short", f"connected_components round {rnd}")
+            nbr_min = (
+                sym.join(labels, sym.a == labels.node)
+                .groupBy("b")
+                .agg(F.min("label").alias("nbr_label"))
             )
-            .withColumn("__changed", F.col("label") < F.col("__old"))
-            .drop("__old")
-            .localCheckpoint(eager=True)
-        )
-        changed = new.filter(F.col("__changed")).limit(1).count()
-        labels = new.drop("__changed")
-        if changed == 0:
-            return labels.select("node", F.col("label").alias("cluster"))
-    raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
+            obs = Observation()
+            labels = (
+                labels.join(nbr_min, labels.node == nbr_min.b, "left")
+                .select(
+                    "node",
+                    F.col("label").alias("__old"),
+                    F.least(
+                        F.col("label"), F.coalesce("nbr_label", F.col("label"))
+                    ).alias("label"),
+                )
+                # min-propagation is monotone: changed <=> new < old. A
+                # retried task can only over-count, and only changed > 0
+                # is tested, so retries cannot flip the decision.
+                .observe(obs, F.count(F.when(F.col("label") < F.col("__old"), 1)).alias("n"))
+                .drop("__old")
+                .localCheckpoint(eager=True)
+            )
+            changed = obs.get["n"]
+            if changed == 0:
+                return labels.select("node", F.col("label").alias("cluster"))
+    finally:
+        sc.setLocalProperty("callSite.short", caller_site)
+    raise RuntimeError(
+        f"connected_components did not converge in {max_iter} rounds: "
+        f"{changed} labels still changed in the last round"
+    )
 
 
 def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:

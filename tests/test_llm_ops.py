@@ -521,20 +521,79 @@ def test_embedding_matmul_dedup_equals_all_pairs(emb):
     assert exact and mm == exact
 
 
+def test_band_keys_match_per_band_expression(spark):
+    # band_keys is the persisted state of the incremental MinHash dedup
+    # and of fuzzy decontamination: its keys must stay bit-identical to
+    # hashing one literal int band id per band over the sliced signature.
+    from python_mapreduce_spark.llm.dedup import band_keys
+
+    sigs = spark.createDataFrame(
+        [
+            (1, [(i * 7919) % 1009 - 500 for i in range(64)]),
+            (2, [-(2**63), 2**63 - 1] * 32),
+            (3, list(range(64))),
+            (4, list(range(64))),  # twin of 3: same keys, different id
+            (5, list(range(20))),  # shorter than bands * rows
+        ],
+        "id long, sig array<long>",
+    )
+    for bands, rows in ((8, 4), (32, 2)):
+        ref = sigs.select(
+            "id",
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(
+                            F.lit(bi).alias("band"),
+                            F.xxhash64(
+                                F.lit(bi), F.concat_ws(",", F.slice("sig", bi * rows + 1, rows))
+                            ).alias("bkey"),
+                        )
+                        for bi in range(bands)
+                    ]
+                )
+            ).alias("bk"),
+        ).select("id", "bk.band", "bk.bkey")
+        got = band_keys(sigs, bands=bands, rows=rows)
+        assert got.schema == ref.schema
+        keys = sorted(got.collect())
+        assert len(keys) == 5 * bands and keys == sorted(ref.collect())
+
+
 def test_connected_components_chain_and_islands(spark):
     # A 5-node chain (worst diameter per edge count), a 2-node island,
     # and a singleton-free contract: only nodes that appear in edges are
     # labeled; every component takes its smallest member as cluster id.
+    # Self-loops (inside the chain and alone), a duplicated edge and a
+    # reversed duplicate must not change any label.
+    from python_mapreduce_spark.llm.dedup import connected_components
+
+    chain = [(5, 4), (4, 3), (3, 2), (2, 1), (10, 11)]
+    extras = [(3, 3), (7, 7), (10, 11), (11, 10)]
+    want = {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10}
+    for rows, expected in ((chain, want), (chain + extras, {**want, 7: 7})):
+        edges = spark.createDataFrame(rows, "id1 long, id2 long")
+        got = {
+            r.node: r.cluster
+            for r in connected_components(edges).collect()
+        }
+        assert got == expected
+
+
+def test_connected_components_reports_non_convergence(spark):
+    # The 5-node chain needs more than one round: after the seeded labels
+    # and one round, nodes 3, 4 and 5 were still moving toward label 1.
     from python_mapreduce_spark.llm.dedup import connected_components
 
     edges = spark.createDataFrame(
-        [(5, 4), (4, 3), (3, 2), (2, 1), (10, 11)], "id1 long, id2 long"
+        [(5, 4), (4, 3), (3, 2), (2, 1)], "id1 long, id2 long"
     )
-    got = {
-        r.node: r.cluster
-        for r in connected_components(edges).collect()
-    }
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10}
+    with pytest.raises(
+        RuntimeError,
+        match=r"did not converge in 1 rounds: 3 labels still changed in the last round",
+    ):
+        connected_components(edges, max_iter=1)
+    assert spark.sparkContext.getLocalProperty("callSite.short") is None
 
 
 def test_repetition_stats_counts_duplicate_ngrams(spark):
