@@ -22,16 +22,25 @@ expressible as built-in DataFrame ops should use the named operators in
 ``operators/``. ``reduce_groups`` materializes one key group per pandas
 DataFrame (unlike the reference's DiskList streaming escape hatch,
 disk_list.py:6-63); for groups that can exceed executor memory, use an
-algebraic rewrite or ``rdd.groupByKey`` iterators.
+algebraic rewrite or :func:`reduce_groups_streaming`, which streams each
+group as Arrow batches.
 """
 
 from __future__ import annotations
 
+import itertools
 from collections.abc import Callable, Iterable, Iterator, Sequence
 from typing import Any
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _parse_datatype_string
+
+# Rows per output batch of reduce_groups_streaming: a reduce that emits
+# as many rows as it reads must not buffer its whole output either.
+_OUT_BATCH_ROWS = 10_000
 
 
 def _field_names(schema: str) -> list[str]:
@@ -194,7 +203,6 @@ def reduce_groups_streaming(
     fn: Callable[[tuple, Iterator[tuple], Any], Iterable[tuple]],
     schema: str,
     aux: Any = None,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Whole-group reduce for groups that may EXCEED executor memory —
     the Spark twin of the reference's DiskList escape hatch
@@ -202,32 +210,45 @@ def reduce_groups_streaming(
 
     Where :func:`reduce_groups` materializes each group as one pandas
     DataFrame, here ``fn(key, rows_iter, aux)`` receives the group as a
-    LAZY iterator of value tuples: PySpark's ``groupByKey`` backs it
-    with an external (spilling) merge, so a single huge group streams
-    from disk instead of OOM-ing — same contract the reference offers.
+    LAZY iterator of value tuples (the non-key columns, as Python
+    values) and ``key`` as a tuple of Python values. The plan is a
+    grouped Arrow map behind a spilling sort: the group arrives as Arrow
+    batches of at most ``spark.sql.execution.arrow.maxRecordsPerBatch``
+    rows and is decoded one batch at a time, so a single huge group
+    streams from disk instead of OOM-ing — the contract the reference
+    offers. Timestamps arrive as UTC-aware datetimes. Output tuples are
+    written back in batches of ``_OUT_BATCH_ROWS`` rows.
 
-    Slow path squared (pickled rows, no Arrow, no codegen): use only
-    when a group genuinely can't fit; prefer an algebraic rewrite
-    (partial aggregation) or :func:`reduce_groups` otherwise.
+    The per-row Python is still the slow part: prefer an algebraic
+    rewrite (partial aggregation) or :func:`reduce_groups` when groups
+    fit in memory.
     """
     key_cols = [keys] if isinstance(keys, str) else list(keys)
     val_cols = [c for c in df.columns if c not in key_cols]
+    out_schema = to_arrow_schema(_parse_datatype_string(schema))
     b = broadcast_aux(df.sparkSession, aux)
 
-    def run(kv: tuple) -> Iterable[tuple]:
-        key, rows = kv
-        return fn(key, iter(rows), b.value)
+    def rows(batches: Iterator[pa.RecordBatch]) -> Iterator[tuple]:
+        for batch in batches:
+            if val_cols:
+                yield from zip(*(batch.column(c).to_pylist() for c in val_cols))
+            else:
+                yield from itertools.repeat((), batch.num_rows)
 
-    pairs = df.rdd.map(
-        lambda row: (
-            tuple(row[k] for k in key_cols),
-            tuple(row[c] for c in val_cols),
-        )
-    )
-    grouped = (
-        pairs.groupByKey(num_partitions) if num_partitions else pairs.groupByKey()
-    )
-    return df.sparkSession.createDataFrame(grouped.flatMap(run), schema)
+    # The hints select PySpark's iterator form (one group streamed as
+    # batches); they must resolve from this module's globals.
+    def run(
+        key: tuple[pa.Scalar, ...], batches: Iterator[pa.RecordBatch]
+    ) -> Iterator[pa.RecordBatch]:
+        out = iter(fn(tuple(k.as_py() for k in key), rows(batches), b.value))
+        while chunk := list(itertools.islice(out, _OUT_BATCH_ROWS)):
+            cols = zip(*chunk)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, type=f.type) for c, f in zip(cols, out_schema)],
+                schema=out_schema,
+            )
+
+    return df.groupBy(*key_cols).applyInArrow(run, schema)
 
 
 def to_pairs(df: DataFrame, key_col: str, value_cols: Sequence[str] | None = None):

@@ -199,8 +199,14 @@ def test_unpivot_roundtrips_counts(tables):
     }
 
 
-def test_reduce_groups_streaming_matches_agg(tables):
+def test_reduce_groups_streaming_matches_agg(spark, tables):
+    import datetime
+    import math
+    import pickle
+    import warnings
+
     from python_mapreduce_spark.mapreduce import reduce_groups_streaming
+    from python_mapreduce_spark.plans.explain import formatted_plan
 
     li = tables["lineitem"].select("l_returnflag", "l_quantity", "l_extendedprice")
 
@@ -213,20 +219,80 @@ def test_reduce_groups_streaming_matches_agg(tables):
             s += qty
         return [(key[0], n, aux["scale"] * s)]
 
-    got = reduce_groups_streaming(
-        li,
-        "l_returnflag",
-        fn,
-        "flag string, n long, scaled double",
-        aux={"scale": 2.0},
-    )
     exp = li.groupBy(F.col("l_returnflag").alias("flag")).agg(
         F.count(F.lit(1)).alias("n"),
         (F.sum("l_quantity") * 2.0).alias("scaled"),
     )
-    g = {r.flag: (r.n, round(r.scaled, 4)) for r in got.collect()}
     e = {r.flag: (r.n, round(r.scaled, 4)) for r in exp.collect()}
+    # groups larger than one Arrow batch must stream across batches
+    assert max(n for n, _ in e.values()) > 500
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "500")
+    try:
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            got = reduce_groups_streaming(
+                li,
+                "l_returnflag",
+                fn,
+                "flag string, n long, scaled double",
+                aux={"scale": 2.0},
+            )
+        assert not [w for w in caught if "Cannot infer the eval type" in str(w.message)]
+        assert "FlatMapGroupsInArrow" in formatted_plan(got)
+        g = {r.flag: (r.n, round(r.scaled, 4)) for r in got.collect()}
+    finally:
+        spark.conf.set(conf, old)
     assert g == e
+
+    # Row contract: fn sees each row's non-key values as the same Python
+    # values collect() gives (timestamps as the same instant, UTC-aware).
+    df = spark.sql(
+        """SELECT * FROM VALUES
+        ('a', 1L, 1.5D, CAST(1.25 AS DECIMAL(10,2)), DATE'2020-01-02',
+         TIMESTAMP'2020-01-02 03:04:05', 'x', array(1, 2)),
+        ('a', CAST(NULL AS BIGINT), CAST('NaN' AS DOUBLE), CAST(-3.5 AS DECIMAL(10,2)),
+         DATE'2020-01-02', TIMESTAMP'1999-12-31 23:59:59.5', NULL, array()),
+        ('b', 7L, CAST(NULL AS DOUBLE), NULL, DATE'2021-06-30', NULL, 'z', NULL)
+        AS t(k, i, d, dec, dt, ts, s, arr)"""
+    )
+
+    def norm(v):
+        if isinstance(v, float) and math.isnan(v):
+            return "nan"
+        if isinstance(v, datetime.datetime):
+            return v.astimezone(datetime.timezone.utc)
+        return v
+
+    def echo(key, rows, aux):
+        return [(key[0], pickle.dumps(row)) for row in rows]
+
+    seen = reduce_groups_streaming(df, "k", echo, "k string, row binary").collect()
+    got_rows = sorted(
+        (r.k, repr(tuple(map(norm, pickle.loads(r.row))))) for r in seen
+    )
+    exp_rows = sorted((r.k, repr(tuple(map(norm, tuple(r)[1:])))) for r in df.collect())
+    assert got_rows == exp_rows
+
+    # A two-column key arrives as Python natives; a group may emit
+    # nothing, and an all-None output column keeps its declared type.
+    def keyed(key, rows, aux):
+        if key[0] == "b":
+            return []
+        kinds = ",".join(type(k).__name__ for k in key)
+        return [(key[0], key[1], kinds, sum(1 for _ in rows), None)]
+
+    out = reduce_groups_streaming(
+        df, ["k", "dt"], keyed, "k string, dt date, kinds string, n long, nothing double"
+    ).collect()
+    assert [tuple(r) for r in out] == [("a", datetime.date(2020, 1, 2), "str,date", 2, None)]
+
+    # With no value columns every row still arrives, as an empty tuple.
+    counts = reduce_groups_streaming(
+        df.select("k"), "k", lambda key, rows, aux: [(key[0], len(list(rows)))], "k string, n long"
+    ).collect()
+    assert sorted(map(tuple, counts)) == [("a", 2), ("b", 1)]
 
 
 def test_approx_percentile_close_to_exact(tables):
