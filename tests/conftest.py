@@ -24,6 +24,13 @@ def spark():
         "pytest",
         master="local[8]",
         extra_conf={
+            # Size partitions to the local[8] master. The engine default
+            # of 32 (sized for a 32-core host) splits every RDD stage,
+            # spark.range and local-data frame into 32 tasks, which at
+            # sf0.001 is pure scheduling and Python-worker overhead:
+            # tests/test_streaming*.py + test_zorder.py took 472 s at 32
+            # and 196 s at 8 on a 4-core host, with the same results.
+            "spark.default.parallelism": "8",
             "spark.sql.shuffle.partitions": "8",
             # Fresh warehouse per session: the in-memory catalog forgets
             # tables between sessions but their directories persist, and
