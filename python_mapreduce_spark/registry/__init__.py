@@ -2,9 +2,15 @@
 
 Each entry pairs a Spark implementation (a callable ``(spark, sf_dir) ->
 DataFrame``) with an equivalent ANSI-SQL oracle that DuckDB runs over the
-same parquet tables. ``sql=None`` marks genuinely non-SQL-expressible
-operators (custom stateful streaming, approximate sketches) — the driver
-then records a weaker rows-only check.
+same parquet tables. ``sql=None`` marks the few operators whose result is
+not SQL-expressible (approximate ANN result sets, IVF centroids, zlib
+ratios, file extents). Those get a weaker rows-only check, and each has
+an oracle-checked twin (pinned in tests/test_core_queries.py).
+
+One module per family: core, extra, tpch2, tpch3 (relational), joins,
+windows, stats (statistical tests and sketches), llm (text, dedup,
+graph, retrieval, ANN), mr (the mapreduce facade) and streaming.
+``all_queries()`` merges them; the order carries no meaning.
 
 Conventions that make the hash comparison work (see __spark_entry__.py):
   * every computed column is aliased identically on both sides;
@@ -32,362 +38,15 @@ class Query:
     doc: str = ""
 
 
-# The driver verifies a prefix window of all_queries() (50 entries per
-# round), so iteration order IS correctness coverage. Round-10 rotation
-# (mechanical via ``tools/driver_coverage.py --plan-full`` over
-# CORRECTNESS_r01..r09): the window head is the one RED row
-# (q_table_checksum — fixed in 3f4ff15, red on the driver's books
-# since r8; red rows jump the staleness queue, VERDICT r9 item 1),
-# then the 10 never-checked queries (the r9 z-order pair + the 8
-# newly-registered r9_staged entries), then 39 staleness refreshes
-# (all 10 remaining r03 rows + 29 of the 50 r04 rows). The tail is the
-# full staleness-ordered refresh queue (oldest driver round first).
-# Rotation invariant (test-pinned in tests/test_registry_order.py):
-# red rows first, then never-checked, then the staleness queue
-# ascending by last-checked round; new additions append behind
-# everything. Feasibility contract (re-based in round 10, see
-# COVERAGE.md): with a 319-query registry and a 50-slot window, the
-# steady-state worst row age is ceil(319/50) = 7 rounds — every row is
-# refreshed within 7 rounds of its last check under oldest-first
-# rotation.
-DRIVER_PRIORITY: tuple[str, ...] = (
-    "q_table_checksum",
-    "q_zorder_code",
-    "q_zorder_layout",
-    "q_stream_incremental_lpa",
-    "q_kmv_distinct",
-    "q_kmv_intersect",
-    "q_bootstrap_ci",
-    "q_stream_incremental_kmv",
-    "q_bootstrap_diff_ci",
-    "q_sim_ann_ivf_pq",
-    "q_sim_ann_ivf_pq_recall",
-    "q_stream_session_window",
-    "q_stream_stateful_max",
-    "q01_pricing_summary",
-    "q_freq_items",
-    "q_upsert",
-    "q_skew_report",
-    "q_visible_files",
-    "q_corrupt_capture",
-    "q_job_cascade",
-    "q17_small_quantity_revenue",
-    "q_text_fuzzy_match",
-    "q_embedding_norm",
-    "q_json_extract",
-    "q_orders_by_month",
-    "q_scalar_datetime",
-    "q_scalar_string",
-    "q_scalar_math",
-    "q_case_when",
-    "q_fillna",
-    "q_posexplode",
-    "q_filter_project",
-    "q_distinct",
-    "q_count_distinct",
-    "q_topk_orders",
-    "q_offset_page",
-    "q_union",
-    "q_intersect",
-    "q_intersect_all",
-    "q_except",
-    "q_except_all",
-    "q_pivot",
-    "q_unpivot",
-    "q_rollup",
-    "q_cube",
-    "q_grouping_sets",
-    "q_rollup_grouping",
-    "q_stats_agg",
-    "q_median_agg",
-    "q_mode_agg",
-    "q_string_agg",
-    "q_bool_agg",
-    "q_sample_agg",
-    "q_sample_stratified",
-    "q_salted_agg",
-    "q_scalar_subquery",
-    "q_window_firstlast",
-    "q04_priority_check",
-    "q06_forecast_revenue",
-    "q07_nation_volume",
-    "q10_returned_items",
-    "q12_priority_by_status",
-    "q13_order_count_dist",
-    "q14_promo_share",
-    "q_sim_ann_lsh_recall",
-    "q_window_rank_dist_demo",
-    "q_window_cume_demo",
-    "q_stream_incremental_dedup",
-    "q02_min_cost_supplier",
-    "q_join_theta",
-    "q_mr_wordcount",
-    "q_doc_repetition",
-    "q_text_contamination",
-    "q_pii_redact",
-    "q_domain_mix",
-    "q_shard_pack",
-    "q_tfidf_topk",
-    "q_vocab_coverage",
-    "q_nearest_centroid",
-    "q_hash_split",
-    "q_quality_quantile_filter",
-    "q_weighted_sample",
-    "q_deterministic_shuffle",
-    "q_pipeline_curate",
-    "q_pseudonymize",
-    "q_schema_evolution",
-    "q_gopher_filter",
-    "q_temperature_sample",
-    "q_upsample_mix",
-    "q_crossdoc_ngrams",
-    "q_hll_rollup",
-    "q_group_reservoir",
-    "q_stream_incremental_hll",
-    "q_split_leakage",
-    "q_topk_rollup",
-    "q_kll_rollup",
-    "q_clean_text",
-    "q_quality_classifier",
-    "q_semantic_dedup",
-    "q_segment_dedup",
-    "q_cluster_split",
-    "q_perplexity_filter",
-    "q_stream_incremental_contamination",
-    "q_stream_incremental_topk",
-    "q_histogram",
-    "q_table_profile",
-    "q_zscore_outliers",
-    "q_stream_incremental_kll",
-    "q_funnel",
-    "q_cohort_retention",
-    "q_resample_locf",
-    "q_counter_increase",
-    "q_quality_ensemble",
-    "q_media_dedup",
-    "q_media_feature_dedup",
-    "q_pagerank",
-    "q_token_pmi",
-    "q_stream_static_join",
-    "q_scd2_history",
-    "q_robust_scale",
-    "q_inverted_index",
-    "q_dedup_simhash",
-    "q_trending",
-    "q_langid_confusion",
-    "q_diff_tables",
-    "q_data_card",
-    "q_target_encode",
-    "q_winsorize",
-    "q_negative_samples",
-    "q_funnel_windowed",
-    "q_dup_span_removal",
-    "q_domain_cap",
-    "q_stratified_split_exact",
-    "q_quality_quota",
-    "q_token_budget",
-    "q_embed_covariance",
-    "q_chunk_pack",
-    "q_equi_freq_bins",
-    "q_cross_corpus_overlap",
-    "q_psi_drift",
-    "q_ks_test",
-    "q_cdc_chunk_dedup",
-    "q_ngram_diversity",
-    "q_chi2_terms",
-    "q_length_buckets",
-    "q_attribution",
-    "q_assoc_rules",
-    "q_mix_entropy",
-    "q_seasonal_anomaly",
-    "q_golden_record",
-    "q_interval_join",
-    "q_group_ols",
-    "q_containment",
-    "q_rolling_distinct",
-    "q_decayed_trending",
-    "q_tokenizer_fertility",
-    "q_stream_incremental_psi",
-    "q_cluster_canonical",
-    "q_quantile_normalize",
-    "q_top_eigenvector",
-    "q_dup_cluster_sizes",
-    "q_time_split_embargo",
-    "q_class_weights",
-    "q_dedup_savings",
-    "q_auc",
-    "q_calibration_bins",
-    "q_calibration_summary",
-    "q_classification_report",
-    "q_cohens_kappa",
-    "q_fuzzy_decontam",
-    "q_auc_daily",
-    "q_markov",
-    "q_retrieval_eval",
-    "q_mutual_info",
-    "q_woe",
-    "q_nucleus",
-    "q_triangle_stats",
-    "q_jsd_drift",
-    "q_dq_audit",
-    "q_conversion_lag",
-    "q_top_paths",
-    "q_stream_incremental_jsd",
-    "q_gap_report",
-    "q_benford",
-    "q_user_churn",
-    "q_readability",
-    "q_session_stats",
-    "q_rfm",
-    "q_corr_matrix",
-    "q_code_detect",
-    "q_pr_curve",
-    "q_lift_gain",
-    "q_auc_disparity",
-    "q_blocklist_filter",
-    "q_compression_ratio",
-    "q_compression_ratio_eval",
-    "q_hits",
-    "q_sorted_neighborhood",
-    "q_histogram2d",
-    "q_survival_curve",
-    "q_stream_incremental_auc",
-    "q_k_anonymity",
-    "q_missingness",
-    "q_ab_test",
-    "q_bloom_semi_join",
-    "q_time_weighted_avg",
-    "q_ohlc_bars",
-    "q_er_match",
-    "q_sim_ann_ivf_recall",
-    "q08_market_share",
-    "q09_product_profit",
-    "q16_supplier_counts",
-    "q20_volume_suppliers",
-    "q21_sole_returner",
-    "q_join_equi",
-    "q_join_broadcast",
-    "q_join_semi",
-    "q_join_anti",
-    "q_join_outer",
-    "q_join_range",
-    "q_l_diversity",
-    "q_ref_integrity",
-    "q_brier_score",
-    "q_bollinger_bands",
-    "q_gini_domains",
-    "q_pareto_share",
-    "q_zipf_slope",
-    "q_tfidf_terms",
-    "q_dedup_embedding_precluster",
-    "q_dedup_embedding_precluster_eval",
-    "q_heaps_law",
-    "q_anova",
-    "q_welch_ttest",
-    "q_mad_outliers",
-    "q_cusum",
-    "q_stream_cusum",
-    "q_fellegi_sunter",
-    "q_kcore",
-    "q_cramers_v",
-    "q_trimmed_mean",
-    "q_window_topk",
-    "q_window_running",
-    "q_mr_stream_reduce",
-    "q_mr_wordcount_gz",
-    "q_mr_weighted_avg",
-    "q_mr_aux_join",
-    "q_dedup_exact",
-    "q_sim_topk",
-    "q_text_stats",
-    "q_text_langid",
-    "q_text_fingerprint",
-    "q_token_count",
-    "q_multimodal_meta",
-    "q_percentiles",
-    "q_approx_distinct",
-    "q_approx_percentile",
-    "q_scalar_array",
-    "q_scalar_map",
-    "q_collect_agg",
-    "q_sink_roundtrip",
-    "q18_large_volume_orders",
-    "q19_disjunctive_revenue",
-    "q22_dormant_customers",
-    "q_dedup_simhash_eval",
-    "q_stream_incremental",
-    "q11_revenue_share",
-    "q15_top_supplier",
-    "q_join_range_bucketed",
-    "q_join_salted",
-    "q_mannwhitney",
-    "q_spearman",
-    "q_brown_forsythe",
-    "q_jarque_bera",
-    "q_forecast_backtest",
-    "q_market_concentration",
-    "q_autocorr",
-    "q_bh_fdr",
-    "q_partial_corr",
-    "q_ols_influence",
-    "q_bm25_topk",
-    "q_t_closeness",
-    "q_theil",
-    "q_nelson_aalen",
-    "q_kruskal_wallis",
-    "q_mann_kendall",
-    "q_hybrid_retrieval",
-    "q_retrieval_ndcg",
-    "q_count_min",
-    "q_label_propagation",
-    "q_join_asof",
-    "q_join_asof_fwd",
-    "q03_shipping_priority",
-    "q05_region_revenue",
-    "q_window_lag",
-    "q_window_moving_avg",
-    "q_window_range_frame",
-    "q_window_rank_scalable",
-    "q_window_cume_scalable",
-    "q_sessionize",
-    "q_mr_udtf_tokens",
-    "q_mr_udaf_wavg",
-    "q_dedup_jaccard",
-    "q_dedup_minhash",
-    "q_dedup_clusters",
-    "q_dedup_embedding",
-    "q_dedup_embedding_matmul",
-    "q_dedup_embedding_auto",
-    "q_sim_ann_lsh",
-    "q_sim_ann_ivf",
-    "q_text_quality",
-    "q_token_count_bpe",
-    "q_pipeline_prepare",
-    "q_doc_chunking",
-    "q_multimodal_features",
-    "q_multimodal_frames",
-    "q_stream_stream_join",
-    "q_stream_dedup_watermark",
-    "q_stream_tumbling",
-    "q_stream_sliding",
-)
-
-
 def all_queries() -> dict[str, Query]:
-    """Aggregate every category module's QUERIES dict.
-
-    Order: DRIVER_PRIORITY first (the driver's check window), then the
-    remaining round-1-unchecked queries in module order, then the
-    round-1-green remainder.
-    """
+    """Merge every family module's QUERIES dict; a name may appear once."""
     from python_mapreduce_spark.registry import (  # noqa: PLC0415 - lazy, avoids import cycles
         core,
         extra,
         joins,
         llm,
         mr,
-        r8_staged,
-        r9_staged,
+        stats,
         streaming,
         tpch2,
         tpch3,
@@ -395,28 +54,9 @@ def all_queries() -> dict[str, Query]:
     )
 
     merged: dict[str, Query] = {}
-    # Modules whose queries had no r01 oracle rows come before the
-    # (mostly-green) core/extra/tpch2 block in the non-priority tail.
-    for mod in (tpch3, joins, windows, mr, llm, streaming, core, extra, tpch2):
+    for mod in (core, extra, tpch2, tpch3, joins, windows, stats, llm, mr, streaming):
         for name, q in mod.QUERIES.items():
             if name in merged:
                 raise ValueError(f"duplicate query name: {name}")
             merged[name] = q
-    # Round-9 registration of staged batch 2 (R8_WIRING.md split: batch 1
-    # registered in round 8 so the r02 staleness block drained first).
-    # The whole staged module is now live: BATCH1 (9, driver-green r8) +
-    # BATCH2 (20, first driver rows in the r9 window).
-    # Round-10 registration of the r9 staged batch (R9_WIRING.md):
-    # incremental LPA/KMV, KMV sketches, bootstrap CIs, IVF-PQ pair —
-    # 8 entries, registry 311 -> 319.
-    for staged in (r8_staged, r9_staged):
-        for name, q in staged.QUERIES.items():
-            if name in merged:
-                raise ValueError(f"duplicate query name: {name}")
-            merged[name] = q
-
-    out: dict[str, Query] = {}
-    for name in DRIVER_PRIORITY:
-        out[name] = merged.pop(name)  # KeyError = priority list out of date
-    out.update(merged)
-    return out
+    return merged

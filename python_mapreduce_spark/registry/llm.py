@@ -3782,6 +3782,467 @@ FROM a
 """
 
 
+def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # k-core of the exact near-dup graph (llm/dedup.py::kcore): the
+    # "template club" — nodes keeping >= 2 near-dup neighbors after
+    # iterative peeling. Same df-capped edge builder as
+    # q_triangle_stats/q_hits so the three structure probes compare on
+    # one graph. The library peels to the TRUE fixpoint (raising past
+    # max_iter); the oracle unrolls 10 peeling rounds — near-dup
+    # graphs are shallow (clique-ish), and a corpus needing >10 rounds
+    # would surface as a loud hash mismatch, never a silent pass
+    # (rounds m..10 are idempotent once the fixpoint is reached).
+    from python_mapreduce_spark.llm.dedup import kcore, ngram_jaccard_pairs  # noqa: PLC0415
+
+    docs = table(spark, sf_dir, "documents")
+    edges = ngram_jaccard_pairs(
+        docs, "doc_id", "text", threshold=0.8, max_shingle_df=100,
+        prefix_filter=True, positional_filter=True,
+    )
+    return kcore(edges, 2)
+
+
+def _sql_kcore(k: int = 2, rounds: int = 10) -> str:
+    parts = [
+        f"""WITH {_SQL_SHINGLES.strip()},
+posts0 AS (SELECT id, unnest(shingles) AS shingle FROM sets WHERE len(shingles) > 0),
+posts AS (
+  SELECT id, shingle FROM posts0
+  WHERE shingle IN (SELECT shingle FROM posts0 GROUP BY shingle HAVING count(*) <= 100)
+),
+sizes AS (SELECT id, CAST(count(*) AS BIGINT) AS sz FROM posts GROUP BY id),
+inter AS (
+  SELECT a.id AS id1, b.id AS id2, count(*) AS i
+  FROM posts a JOIN posts b ON a.shingle = b.shingle AND a.id < b.id
+  GROUP BY 1, 2
+),
+e0 AS MATERIALIZED (
+  SELECT id1 AS a, id2 AS b FROM (
+    SELECT id1, id2,
+           floor(CAST(i AS DOUBLE) / (sa.sz + sb.sz - i) * 10000.0 + 0.5) / 10000.0
+             AS jaccard
+    FROM inter JOIN sizes sa ON id1 = sa.id JOIN sizes sb ON id2 = sb.id
+  ) WHERE jaccard >= 0.8
+)"""
+    ]
+    for r in range(rounds):
+        parts.append(
+            f""",
+keep{r} AS MATERIALIZED (
+  SELECT v FROM (
+    SELECT v, count(*) AS d FROM (
+      SELECT a AS v FROM e{r} UNION ALL SELECT b FROM e{r}
+    ) GROUP BY v
+  ) WHERE d >= {k}
+),
+e{r + 1} AS MATERIALIZED (
+  SELECT a, b FROM e{r}
+  WHERE a IN (SELECT v FROM keep{r}) AND b IN (SELECT v FROM keep{r})
+)"""
+        )
+    parts.append(
+        f"""
+SELECT v AS node, d AS degree FROM (
+  SELECT v, CAST(count(*) AS BIGINT) AS d FROM (
+    SELECT a AS v FROM e{rounds} UNION ALL SELECT b FROM e{rounds}
+  ) GROUP BY v
+) WHERE d >= {k}"""
+    )
+    return "".join(parts)
+
+
+SQL_KCORE = _sql_kcore()
+
+
+def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # BM25 retrieval (llm/text.py::bm25_topk): top-10 docs for the
+    # query {merge, window, stream} under Lucene-style Okapi BM25 —
+    # the lexical half of a hybrid retriever, next to TF-IDF keywords
+    # and the dense ANN path. Per-term contributions quantize to 1e-6
+    # into a DECIMAL sum so the per-doc score (and thus the top-k SET)
+    # is partition-order-independent; the cut is orderBy+limit
+    # (TakeOrderedAndProject), no window.
+    from python_mapreduce_spark.llm.text import bm25_topk  # noqa: PLC0415
+
+    return bm25_topk(
+        table(spark, sf_dir, "documents"),
+        "doc_id",
+        "text",
+        ["merge", "window", "stream"],
+        k=10,
+    )
+
+
+SQL_BM25_TOPK = f"""
+WITH toks AS (
+  SELECT doc_id AS id,
+         unnest(regexp_extract_all(lower(coalesce(text, '')), '[a-z]+'))
+           AS term
+  FROM documents
+),
+tf AS (
+  SELECT id, term, CAST(count(*) AS BIGINT) AS tf FROM toks GROUP BY 1, 2
+),
+dl AS (SELECT id, CAST(SUM(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
+stats AS (
+  SELECT CAST(COUNT(*) AS BIGINT) AS nd, CAST(SUM(dl) AS DOUBLE) AS tok
+  FROM dl
+),
+nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
+qtf AS (SELECT * FROM tf WHERE term IN ('merge', 'window', 'stream')),
+dfreq AS (
+  SELECT term, CAST(count(*) AS BIGINT) AS df FROM qtf GROUP BY 1
+),
+j AS (
+  SELECT q.id, q.tf, d.df, l.dl, s.nd, s.tok, nn.n
+  FROM qtf q
+  JOIN dfreq d USING (term)
+  JOIN dl l ON q.id = l.id
+  CROSS JOIN stats s CROSS JOIN nn
+),
+contrib AS (
+  SELECT id, dl,
+         {sql_dround(
+             'ln(1.0 + (CAST(n AS DOUBLE) - df + 0.5) / (df + 0.5))'
+             ' * CAST(tf AS DOUBLE) * 2.2'
+             ' / (CAST(tf AS DOUBLE) + 1.2 * (0.25'
+             ' + 0.75 * CAST(dl AS DOUBLE) / (tok / CAST(nd AS DOUBLE))))',
+             6)} AS c
+  FROM j
+),
+scored AS (
+  SELECT id, CAST(COUNT(*) AS BIGINT) AS matched_terms,
+         CAST(MAX(dl) AS BIGINT) AS dl,
+         CAST(SUM(CAST(c AS DECIMAL(38,6))) AS DOUBLE) AS score_raw
+  FROM contrib GROUP BY id
+)
+SELECT id, matched_terms, dl, {sql_dround('score_raw', 4)} AS score
+FROM scored ORDER BY score_raw DESC, id ASC LIMIT 10
+"""
+
+
+def q_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Hybrid retrieval via reciprocal-rank fusion (VERDICT r7 stretch
+    # item 7; llm/similarity.py::reciprocal_rank_fusion): the lexical
+    # BM25 top-20 for {merge, window, stream} fuses with the dense
+    # cosine top-20 around the vec_id=3 embedding — rank-based fusion
+    # needs no score calibration between the two ladders. Lexical ranks
+    # come from global_row_number over the emitted 1e-4 score (desc) +
+    # id tiebreak (the scalable rank primitive — no single-task
+    # window); dense ranks are cosine_topk's own rn. Both ladders are
+    # top-k-sized by contract, so the fusion stage touches ~40 rows at
+    # ANY corpus scale.
+    from pyspark.sql import Window  # noqa: PLC0415
+
+    from python_mapreduce_spark.llm.similarity import (  # noqa: PLC0415
+        cosine_topk,
+        reciprocal_rank_fusion,
+    )
+    from python_mapreduce_spark.llm.text import bm25_topk  # noqa: PLC0415
+
+    docs = table(spark, sf_dir, "documents")
+    emb = table(spark, sf_dir, "embeddings")
+    lex = bm25_topk(docs, "doc_id", "text", ["merge", "window", "stream"], k=20)
+    # lex is <= k rows BY CONTRACT (bm25_topk output is a top-k cut), so
+    # a plain row_number window over it is bounded at any corpus scale —
+    # the distributed global_row_number machinery (range checkpoint +
+    # offsets collect, ~3 blocking jobs) would buy nothing here. Same
+    # (score DESC, id ASC) total order, identical ranks.
+    lex_ranked = lex.withColumn(
+        "rank",
+        F.row_number()
+        .over(Window.orderBy(F.col("score").desc(), F.col("id").asc()))
+        .cast("long"),
+    )
+    dense = cosine_topk(
+        emb, emb.filter(F.col("vec_id") == 3), "vec_id", "embedding", k=20
+    )
+    dense_ranked = dense.select(
+        F.col("neighbor_id").alias("id"), F.col("rn").alias("rank")
+    )
+    return reciprocal_rank_fusion([lex_ranked, dense_ranked], k=10)
+
+
+SQL_HYBRID_RETRIEVAL = f"""
+WITH toks AS (
+  SELECT doc_id AS id,
+         unnest(regexp_extract_all(lower(coalesce(text, '')), '[a-z]+'))
+           AS term
+  FROM documents
+),
+tf AS (
+  SELECT id, term, CAST(count(*) AS BIGINT) AS tf FROM toks GROUP BY 1, 2
+),
+dl AS (SELECT id, CAST(SUM(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
+stats AS (
+  SELECT CAST(COUNT(*) AS BIGINT) AS nd, CAST(SUM(dl) AS DOUBLE) AS tok
+  FROM dl
+),
+nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
+qtf AS (SELECT * FROM tf WHERE term IN ('merge', 'window', 'stream')),
+dfreq AS (
+  SELECT term, CAST(count(*) AS BIGINT) AS df FROM qtf GROUP BY 1
+),
+j AS (
+  SELECT q.id, q.tf, d.df, l.dl, s.nd, s.tok, nn.n
+  FROM qtf q
+  JOIN dfreq d USING (term)
+  JOIN dl l ON q.id = l.id
+  CROSS JOIN stats s CROSS JOIN nn
+),
+contrib AS (
+  SELECT id,
+         {sql_dround(
+             'ln(1.0 + (CAST(n AS DOUBLE) - df + 0.5) / (df + 0.5))'
+             ' * CAST(tf AS DOUBLE) * 2.2'
+             ' / (CAST(tf AS DOUBLE) + 1.2 * (0.25'
+             ' + 0.75 * CAST(dl AS DOUBLE) / (tok / CAST(nd AS DOUBLE))))',
+             6)} AS c
+  FROM j
+),
+lexscored AS (
+  SELECT id, CAST(SUM(CAST(c AS DECIMAL(38,6))) AS DOUBLE) AS score_raw
+  FROM contrib GROUP BY id
+),
+lexcut AS (
+  SELECT id, {sql_dround('score_raw', 4)} AS score
+  FROM lexscored ORDER BY score_raw DESC, id ASC LIMIT 20
+),
+lexr AS (
+  SELECT id, CAST(row_number() OVER (ORDER BY score DESC, id ASC)
+                  AS BIGINT) AS r
+  FROM lexcut
+),
+e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+qv AS (SELECT v FROM e WHERE vec_id = 3),
+dsc AS (
+  SELECT c.vec_id AS id,
+         floor(list_dot_product(qv.v, c.v)
+               / (sqrt(list_dot_product(qv.v, qv.v))
+                  * sqrt(list_dot_product(c.v, c.v)))
+               * 1000000.0 + 0.5) / 1000000.0 AS cos
+  FROM e c CROSS JOIN qv WHERE c.vec_id != 3
+),
+denser AS (
+  SELECT id, r FROM (
+    SELECT id, CAST(row_number() OVER (ORDER BY cos DESC, id ASC)
+                    AS BIGINT) AS r
+    FROM dsc)
+  WHERE r <= 20
+),
+u AS (
+  SELECT id, {sql_dround('1.0 / (60.0 + CAST(r AS DOUBLE))', 8)} AS c, r
+  FROM lexr
+  UNION ALL
+  SELECT id, {sql_dround('1.0 / (60.0 + CAST(r AS DOUBLE))', 8)} AS c, r
+  FROM denser
+),
+f AS (
+  SELECT id, CAST(SUM(CAST(c AS DECIMAL(38,8))) AS DOUBLE) AS s,
+         CAST(COUNT(*) AS BIGINT) AS n_ladders,
+         CAST(MIN(r) AS BIGINT) AS best_rank
+  FROM u GROUP BY id
+)
+SELECT id, {sql_dround('s', 8)} AS rrf_score, n_ladders, best_rank
+FROM f ORDER BY s DESC, id ASC LIMIT 10
+"""
+
+
+def q_retrieval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # NDCG@5 per query label (llm/similarity.py::retrieval_ndcg):
+    # position-aware retrieval quality beside q_retrieval_eval's
+    # MRR/P@k — same exact cosine top-5 for the 50 query vectors,
+    # same-label = relevant, but every hit is credited 1/log2(rank+1)
+    # against the ideal ordering of the query's TRUE relevant pool
+    # (label count minus self). The oracle replays the identical
+    # rounded-cosine ranking, the 1e-8 gain quantization, and the
+    # cumulative ideal-gain ladder.
+    from python_mapreduce_spark.llm.similarity import retrieval_ndcg  # noqa: PLC0415
+
+    emb = table(spark, sf_dir, "embeddings")
+    return retrieval_ndcg(
+        emb, emb.filter(F.col("vec_id") < 50), "vec_id", "embedding", "label", k=5
+    )
+
+
+SQL_RETRIEVAL_NDCG = f"""
+WITH e AS (
+  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
+),
+scored AS (
+  SELECT q.vec_id AS query_id, q.label AS ql,
+         c.vec_id AS neighbor_id, c.label AS cl,
+         floor(list_dot_product(q.v, c.v)
+               / (sqrt(list_dot_product(q.v, q.v))
+                  * sqrt(list_dot_product(c.v, c.v)))
+               * 1000000.0 + 0.5) / 1000000.0 AS cos
+  FROM e q JOIN e c ON q.vec_id < 50 AND c.vec_id != q.vec_id
+),
+topk AS (
+  SELECT * FROM (
+    SELECT *, row_number() OVER (
+        PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rn
+    FROM scored) WHERE rn <= 5
+),
+gains AS (
+  SELECT i,
+         floor(1.0 / log2(CAST(i AS DOUBLE) + 1.0) * 100000000.0 + 0.5)
+           / 100000000.0 AS g
+  FROM generate_series(1, 5) t(i)
+),
+ideal AS (
+  SELECT i AS m,
+         CAST(SUM(CAST(g AS DECIMAL(28,8))) OVER (ORDER BY i) AS DOUBLE)
+           AS idcg
+  FROM gains
+),
+perq AS (
+  SELECT query_id, ql,
+         CAST(SUM(CASE WHEN cl IS NOT DISTINCT FROM ql
+              THEN CAST(floor(1.0 / log2(CAST(rn AS DOUBLE) + 1.0)
+                              * 100000000.0 + 0.5) / 100000000.0
+                        AS DECIMAL(28,8))
+              ELSE CAST(0 AS DECIMAL(28,8)) END) AS DOUBLE) AS dcg
+  FROM topk GROUP BY 1, 2
+),
+relc AS (SELECT label, CAST(count(*) AS BIGINT) AS c FROM e GROUP BY 1),
+pq2 AS (
+  SELECT p.query_id, p.ql, p.dcg, least(coalesce(r.c, 0) - 1, 5) AS m
+  FROM perq p LEFT JOIN relc r ON p.ql IS NOT DISTINCT FROM r.label
+),
+pq3 AS (
+  SELECT pq2.*,
+         CASE WHEN pq2.m > 0
+              THEN floor(dcg / i.idcg * 100000000.0 + 0.5) / 100000000.0
+         END AS nq
+  FROM pq2 LEFT JOIN ideal i ON pq2.m = i.m
+)
+SELECT ql AS label, CAST(count(*) AS BIGINT) AS n_queries,
+       CAST(count(nq) AS BIGINT) AS n_evaluable,
+       {sql_dround(
+           'CAST(SUM(CAST(nq AS DECIMAL(28,8))) AS DOUBLE) / count(nq)', 6)}
+         AS ndcg_at_k
+FROM pq3 GROUP BY 1
+"""
+
+
+def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Synchronous min-tiebreak label propagation communities
+    # (llm/dedup.py::label_propagation) on the SAME df-capped near-dup
+    # graph as q_kcore / q_triangle_stats / q_hits — the fifth
+    # structure probe on one shared graph. The oracle unrolls the
+    # exact 4 synchronous rounds (the kcore unroll pattern): argmax by
+    # (count DESC, label ASC) is a total order, so communities match
+    # bit-for-bit.
+    from python_mapreduce_spark.llm.dedup import (  # noqa: PLC0415
+        label_propagation,
+        ngram_jaccard_pairs,
+    )
+
+    docs = table(spark, sf_dir, "documents")
+    edges = ngram_jaccard_pairs(
+        docs, "doc_id", "text", threshold=0.8, max_shingle_df=100,
+        prefix_filter=True, positional_filter=True,
+    )
+    return label_propagation(edges, rounds=4)
+
+
+def _sql_label_propagation(rounds: int = 4) -> str:
+    parts = [
+        f"""WITH {_SQL_SHINGLES.strip()},
+posts0 AS (SELECT id, unnest(shingles) AS shingle FROM sets WHERE len(shingles) > 0),
+posts AS (
+  SELECT id, shingle FROM posts0
+  WHERE shingle IN (SELECT shingle FROM posts0 GROUP BY shingle HAVING count(*) <= 100)
+),
+sizes AS (SELECT id, CAST(count(*) AS BIGINT) AS sz FROM posts GROUP BY id),
+inter AS (
+  SELECT a.id AS id1, b.id AS id2, count(*) AS i
+  FROM posts a JOIN posts b ON a.shingle = b.shingle AND a.id < b.id
+  GROUP BY 1, 2
+),
+e0 AS MATERIALIZED (
+  SELECT id1 AS a, id2 AS b FROM (
+    SELECT id1, id2,
+           floor(CAST(i AS DOUBLE) / (sa.sz + sb.sz - i) * 10000.0 + 0.5) / 10000.0
+             AS jaccard
+    FROM inter JOIN sizes sa ON id1 = sa.id JOIN sizes sb ON id2 = sb.id
+  ) WHERE jaccard >= 0.8
+),
+sym AS MATERIALIZED (
+  SELECT a, b FROM (
+    SELECT a, b FROM e0 UNION ALL SELECT b AS a, a AS b FROM e0
+  ) WHERE a != b GROUP BY a, b
+),
+l0 AS MATERIALIZED (SELECT DISTINCT a AS node, a AS label FROM sym)"""
+    ]
+    for r in range(rounds):
+        parts.append(
+            f""",
+cnt{r} AS (
+  SELECT s.a, l.label AS nbl, CAST(count(*) AS BIGINT) AS c
+  FROM sym s JOIN l{r} l ON s.b = l.node GROUP BY 1, 2
+),
+l{r + 1} AS MATERIALIZED (
+  SELECT a AS node, nbl AS label FROM (
+    SELECT a, nbl,
+           row_number() OVER (PARTITION BY a ORDER BY c DESC, nbl) AS rn
+    FROM cnt{r}
+  ) WHERE rn = 1
+)"""
+        )
+    parts.append(
+        f"""
+SELECT label AS community, CAST(count(*) AS BIGINT) AS n_nodes
+FROM l{rounds} GROUP BY 1"""
+    )
+    return "".join(parts)
+
+
+SQL_LABEL_PROPAGATION = _sql_label_propagation()
+
+
+#: Measured PQ dials: m=16 subspaces on the 64-dim
+#: embeddings, 2 Lloyd passes on the residual codebooks; bits/refine
+#: are CORPUS-ADAPTIVE via llm/similarity.py::pq_dials — 4-bit codes +
+#: refine 40 below ~30k vectors (recall 0.940/0.920/0.900 at
+#: sf0.001/0.01/0.1), 6-bit codes + refine n/500 above (0.90 at 50k,
+#: 0.86 at 100k; the FIXED small-SF dials collapsed to 0.48 at 100k —
+#: the r5 zero-margin lesson, re-learned and dialed out live).
+_PQ_DIALS = {"m": 16, "pq_iters": 2, "iters": 3}
+
+
+def q_sim_ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # IVF-PQ approximate top-k (llm/similarity.py::ann_topk_ivf_pq):
+    # the COMPRESSED-SCAN scale path completing the ANN family — the
+    # probed corpus fraction is scanned as 16 small integer codes per
+    # vector instead of 64 floats, the ADC scoring is pure codegen
+    # (element_at LUT lookups, no Python in the hot path), and the
+    # approx top k*refine are exact-cosine re-ranked so emitted scores
+    # are exact and PQ error only affects recall. Not SQL-expressible
+    # (distributed k-means + float matmuls); rows-only, gated by the
+    # hash-green recall twin below.
+    from python_mapreduce_spark.llm.similarity import ann_topk_ivf_pq  # noqa: PLC0415
+
+    emb = table(spark, sf_dir, "embeddings")
+    queries = emb.filter(F.col("vec_id") < 10)
+    return ann_topk_ivf_pq(emb, queries, "vec_id", "embedding", k=5, **_PQ_DIALS)
+
+
+def q_sim_ann_ivf_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # IVF-PQ against brute force — the tolerance-oracle pattern of the
+    # other ANN twins (_ann_recall_eval): recall_floor
+    # = least(actual, 0.8), so the oracle's literal matches exactly when
+    # the floor holds and a red row carries the miss magnitude.
+    from python_mapreduce_spark.llm.similarity import ann_topk_ivf_pq  # noqa: PLC0415
+
+    emb = table(spark, sf_dir, "embeddings")
+    queries = emb.filter(F.col("vec_id") < 10)
+    exact = cosine_topk(emb, queries, "vec_id", "embedding", k=5)
+    approx = ann_topk_ivf_pq(emb, queries, "vec_id", "embedding", k=5, **_PQ_DIALS)
+    return _ann_recall_eval(exact, approx, 0.8)
+
+
 QUERIES: dict[str, Query] = {
     "q_dedup_savings": Query(
         q_dedup_savings, SQL_DEDUP_SAVINGS, "effective dataset size after quality-aware dedup"
@@ -3976,4 +4437,37 @@ QUERIES: dict[str, Query] = {
     "q_heaps_law": Query(q_heaps_law, SQL_HEAPS_LAW, "Heaps vocabulary-growth fit over doc-rank prefix buckets"),
     "q_dedup_embedding_precluster": Query(q_dedup_embedding_precluster, None, "IVF pre-cluster cosine dedup pairs (bounded fallback; eval-twin gated)"),
     "q_dedup_embedding_precluster_eval": Query(q_dedup_embedding_precluster_eval, SQL_DEDUP_EMBEDDING_PRECLUSTER_EVAL, "precision/recall gate for the precluster dedup vs exact all-pairs"),
+    "q_kcore": Query(
+        q_kcore, SQL_KCORE, "2-core of the near-dup graph via 10 unrolled peels"
+    ),
+    "q_bm25_topk": Query(
+        q_bm25_topk,
+        SQL_BM25_TOPK,
+        "Okapi BM25 top-10 for {merge, window, stream}",
+    ),
+    "q_hybrid_retrieval": Query(
+        q_hybrid_retrieval,
+        SQL_HYBRID_RETRIEVAL,
+        "RRF hybrid retrieval: BM25 lexical + dense cosine ladders",
+    ),
+    "q_retrieval_ndcg": Query(
+        q_retrieval_ndcg,
+        SQL_RETRIEVAL_NDCG,
+        "NDCG@5 per query label against the true relevant pool",
+    ),
+    "q_label_propagation": Query(
+        q_label_propagation,
+        SQL_LABEL_PROPAGATION,
+        "LPA communities on the near-dup graph via 4 unrolled sync rounds",
+    ),
+    "q_sim_ann_ivf_pq": Query(
+        q_sim_ann_ivf_pq,
+        None,
+        "IVF-PQ compressed-scan approximate top-k (rows-only; hash twin q_sim_ann_ivf_pq_recall)",
+    ),
+    "q_sim_ann_ivf_pq_recall": Query(
+        q_sim_ann_ivf_pq_recall,
+        _sql_ann_recall(0.8),
+        "IVF-PQ recall vs brute force (tolerance oracle, floor 0.8 with measured margin)",
+    ),
 }

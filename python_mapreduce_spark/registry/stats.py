@@ -1,43 +1,11 @@
-"""Round-8 STAGED registry entries — written and oracle-verified in
-round 7, deliberately NOT wired into ``all_queries()`` yet.
+"""Statistics and sketch queries: hypothesis tests, robust and
+nonparametric statistics, inequality and survival measures, forecast
+backtests, record linkage weights, and the mergeable distinct-count
+sketches (count-min, KMV) with their bootstrap confidence intervals.
 
-The round-7 rotation plan capped new registry additions at 12 (VERDICT
-r6 item 2) so the driver's staleness-refresh contract stays feasible;
-these entries are the NEXT batch, fully built — Spark query + DuckDB
-oracle + staging test (``tests/test_r8_staged_oracles.py`` runs the
-exact check_oracle comparison over them at sf0.001) — so round 8
-registers them by importing ``QUERIES`` from this module into
-``registry/__init__.all_queries()`` and appending the names behind the
-staleness block.
-
-Operators covered, batch 1: one-way ANOVA, Welch t-test, MAD robust
-outliers, batch CUSUM change-points, Fellegi-Sunter linkage weights,
-the streaming CUSUM monitor (oracle = the batch prefix form replayed
-in SQL), k-core (10-round unrolled peeling oracle), bias-corrected
-Cramér's V, and the exact trimmed mean. Mutual information is NOT
-here: the engine already ships it as q_mutual_info (registry/core.py)
-— a duplicate operator added this round was caught shadowing it and
-removed.
-
-Batch 2 (continuation session — same evidence bar: hash-green at
-sf0.001/0.01/0.1 AND on all four degenerate replicas via
-tools/check_staged.py, replay pytests in tests/test_r8_ops.py, plan
-audit in tests/test_r8_staged_plans.py): Mann-Whitney U and Spearman
-rho (both RANK-FREE — per-distinct-value counts + distributed running
-sums), Brown-Forsythe spread test, Jarque-Bera normality, the
-seasonal-naive forecast backtest (MAE/bias/RMSE/WAPE/sMAPE/MASE),
-market concentration (HHI/effective-N/CR4), the autocorrelation
-function, Benjamini-Hochberg FDR control, first-order partial
-correlation (confounder control), the OLS influence audit (leverage /
-standardized residual / Cook's D), Okapi BM25 retrieval scoring
-(the lexical half of hybrid search), the t-closeness TVD release gate
-(completing k-anonymity / l-diversity), Theil T inequality with its
-within/between decomposition, Nelson-Aalen cumulative hazard (beside
-Kaplan-Meier), tie-corrected Kruskal-Wallis (ANOVA's nonparametric
-twin), and Mann-Kendall trend + Sen's slope (nonparametric trend on
-rolled series). If the round-8 rotation math cannot absorb all 25
-registrations at once, split: register batch 1 (9) in round 8 and
-batch 2 (16) in round 9 — see R8_WIRING.md.
+Every entry has an exact DuckDB oracle. Statistics that would otherwise
+drift by an ulp between engines are computed from integer or DECIMAL
+sufficient statistics, so both sides round the same value.
 """
 
 from __future__ import annotations
@@ -70,6 +38,7 @@ _SSW_TERM = (
     "(CAST(sumsq_c AS DOUBLE)"
     " - CAST(sum_c AS DOUBLE) * CAST(sum_c AS DOUBLE) / n_g) / 10000.0"
 )
+
 
 SQL_ANOVA = f"""
 WITH base AS (
@@ -125,6 +94,7 @@ def q_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _W_OK = "n_a >= 2 AND n_b >= 2 AND (va + vb) > 0"
+
 
 SQL_WELCH_TTEST = f"""
 WITH base AS (
@@ -309,166 +279,6 @@ CROSS JOIN u
 SQL_FELLEGI_SUNTER = _sql_fs()
 
 
-def q_stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Streaming CUSUM monitor (streaming/windows.py::stateful_cusum):
-    # per-event-type state folded across micro-batches; the final
-    # update row per key must equal the batch prefix-form fold, which
-    # is exactly what the oracle computes.
-    from python_mapreduce_spark.registry.streaming import _events_stream  # noqa: PLC0415
-    from python_mapreduce_spark.session import tune  # noqa: PLC0415
-    from python_mapreduce_spark.streaming.incremental import (  # noqa: PLC0415
-        normalize_event_ts,
-        run_stream_to_memory,
-    )
-    from python_mapreduce_spark.streaming.windows import stateful_cusum  # noqa: PLC0415
-
-    tune(spark)
-    stream = normalize_event_ts(
-        _events_stream(spark, sf_dir, max_files_per_trigger=1)
-    )
-    updates = stateful_cusum(
-        stream, "event_type", ["ts", "event_id"], "value",
-        target=50.0, allowance=5.0, threshold=300.0,
-    )
-    out = run_stream_to_memory(updates, output_mode="update")
-    last = out.groupBy("event_type").agg(
-        F.max(
-            F.struct("rows_seen", "cusum_pos", "cusum_neg", "alarm")
-        ).alias("__s")
-    )
-    return last.select(
-        "event_type",
-        F.col("__s.rows_seen").alias("rows_seen"),
-        dround("__s.cusum_pos", 6).alias("cusum_pos"),
-        dround("__s.cusum_neg", 6).alias("cusum_neg"),
-        F.col("__s.alarm").alias("alarm"),
-    )
-
-
-SQL_STREAM_CUSUM = f"""
-WITH p AS (
-  SELECT event_type,
-         SUM(COALESCE(value - 50.0, 0.0) - 5.0) OVER w AS p_pos,
-         SUM(-COALESCE(value - 50.0, 0.0) - 5.0) OVER w AS p_neg,
-         row_number() OVER w AS rn,
-         COUNT(*) OVER (PARTITION BY event_type) AS n_rows
-  FROM events
-  WINDOW w AS (PARTITION BY event_type ORDER BY ts, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-),
-s AS (
-  SELECT event_type, rn, n_rows,
-         p_pos - LEAST(0.0, MIN(p_pos) OVER w2) AS s_pos,
-         p_neg - LEAST(0.0, MIN(p_neg) OVER w2) AS s_neg
-  FROM p
-  WINDOW w2 AS (PARTITION BY event_type ORDER BY rn
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-)
-SELECT event_type,
-       CAST(n_rows AS BIGINT) AS rows_seen,
-       {sql_dround('s_pos', 6)} AS cusum_pos,
-       {sql_dround('s_neg', 6)} AS cusum_neg,
-       (s_pos > 300.0 OR s_neg > 300.0) AS alarm
-FROM s WHERE rn = n_rows
-"""
-
-
-QUERIES: dict[str, Query] = {
-    "q_anova": Query(q_anova, SQL_ANOVA, "one-way ANOVA F across order priorities"),
-    "q_welch_ttest": Query(
-        q_welch_ttest, SQL_WELCH_TTEST, "Welch t between order-status segments"
-    ),
-    "q_mad_outliers": Query(
-        q_mad_outliers, SQL_MAD_OUTLIERS, "per-source robust z via exact median/MAD"
-    ),
-    "q_cusum": Query(q_cusum, SQL_CUSUM, "CUSUM change-point sums per event type"),
-    "q_fellegi_sunter": Query(
-        q_fellegi_sunter, SQL_FELLEGI_SUNTER, "FS linkage weights over blocked pairs"
-    ),
-    "q_stream_cusum": Query(
-        q_stream_cusum, SQL_STREAM_CUSUM, "streaming CUSUM monitor vs batch fold"
-    ),
-}
-
-
-def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # k-core of the exact near-dup graph (llm/dedup.py::kcore): the
-    # "template club" — nodes keeping >= 2 near-dup neighbors after
-    # iterative peeling. Same df-capped edge builder as
-    # q_triangle_stats/q_hits so the three structure probes compare on
-    # one graph. The library peels to the TRUE fixpoint (raising past
-    # max_iter); the oracle unrolls 10 peeling rounds — near-dup
-    # graphs are shallow (clique-ish), and a corpus needing >10 rounds
-    # would surface as a loud hash mismatch, never a silent pass
-    # (rounds m..10 are idempotent once the fixpoint is reached).
-    from python_mapreduce_spark.llm.dedup import kcore, ngram_jaccard_pairs  # noqa: PLC0415
-
-    docs = table(spark, sf_dir, "documents")
-    edges = ngram_jaccard_pairs(
-        docs, "doc_id", "text", threshold=0.8, max_shingle_df=100,
-        prefix_filter=True, positional_filter=True,
-    )
-    return kcore(edges, 2)
-
-
-def _sql_kcore(k: int = 2, rounds: int = 10) -> str:
-    from python_mapreduce_spark.registry.llm import _SQL_SHINGLES  # noqa: PLC0415
-
-    parts = [
-        f"""WITH {_SQL_SHINGLES.strip()},
-posts0 AS (SELECT id, unnest(shingles) AS shingle FROM sets WHERE len(shingles) > 0),
-posts AS (
-  SELECT id, shingle FROM posts0
-  WHERE shingle IN (SELECT shingle FROM posts0 GROUP BY shingle HAVING count(*) <= 100)
-),
-sizes AS (SELECT id, CAST(count(*) AS BIGINT) AS sz FROM posts GROUP BY id),
-inter AS (
-  SELECT a.id AS id1, b.id AS id2, count(*) AS i
-  FROM posts a JOIN posts b ON a.shingle = b.shingle AND a.id < b.id
-  GROUP BY 1, 2
-),
-e0 AS MATERIALIZED (
-  SELECT id1 AS a, id2 AS b FROM (
-    SELECT id1, id2,
-           floor(CAST(i AS DOUBLE) / (sa.sz + sb.sz - i) * 10000.0 + 0.5) / 10000.0
-             AS jaccard
-    FROM inter JOIN sizes sa ON id1 = sa.id JOIN sizes sb ON id2 = sb.id
-  ) WHERE jaccard >= 0.8
-)"""
-    ]
-    for r in range(rounds):
-        parts.append(
-            f""",
-keep{r} AS MATERIALIZED (
-  SELECT v FROM (
-    SELECT v, count(*) AS d FROM (
-      SELECT a AS v FROM e{r} UNION ALL SELECT b FROM e{r}
-    ) GROUP BY v
-  ) WHERE d >= {k}
-),
-e{r + 1} AS MATERIALIZED (
-  SELECT a, b FROM e{r}
-  WHERE a IN (SELECT v FROM keep{r}) AND b IN (SELECT v FROM keep{r})
-)"""
-        )
-    parts.append(
-        f"""
-SELECT v AS node, d AS degree FROM (
-  SELECT v, CAST(count(*) AS BIGINT) AS d FROM (
-    SELECT a AS v FROM e{rounds} UNION ALL SELECT b FROM e{rounds}
-  ) GROUP BY v
-) WHERE d >= {k}"""
-    )
-    return "".join(parts)
-
-
-SQL_KCORE = _sql_kcore()
-
-QUERIES["q_kcore"] = Query(
-    q_kcore, SQL_KCORE, "2-core of the near-dup graph via 10 unrolled peels"
-)
-
-
 def q_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Cramér's V between document language and source (operators/
     # aggregates.py::cramers_v) — the bounded-[0,1] association score
@@ -526,10 +336,6 @@ SELECT n, r, c,
 FROM s
 """
 
-QUERIES["q_cramers_v"] = Query(
-    q_cramers_v, SQL_CRAMERS_V, "bias-corrected Cramér's V lang vs source"
-)
-
 
 def q_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 10%-trimmed mean order value per priority (operators/
@@ -575,10 +381,6 @@ SELECT o_orderpriority, n, n_used,
        END AS trimmed_mean
 FROM agg
 """
-
-QUERIES["q_trimmed_mean"] = Query(
-    q_trimmed_mean, SQL_TRIMMED_MEAN, "exact 10%-trimmed mean per priority"
-)
 
 
 def q_mannwhitney(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -650,12 +452,6 @@ SELECT n_a, n_b,
 FROM f
 """
 
-QUERIES["q_mannwhitney"] = Query(
-    q_mannwhitney,
-    SQL_MANNWHITNEY,
-    "tie-corrected Mann-Whitney U z, click vs purchase values",
-)
-
 
 def q_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Spearman rank correlation (operators/aggregates.py::
@@ -721,12 +517,6 @@ SELECT n, {sql_dround('rho', 6)} AS spearman_rho,
 FROM f
 """
 
-QUERIES["q_spearman"] = Query(
-    q_spearman,
-    SQL_SPEARMAN,
-    "rank-free Spearman rho, order value vs order date",
-)
-
 
 def q_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Brown-Forsythe spread test (operators/aggregates.py::
@@ -746,6 +536,7 @@ _BF_SSW_TERM = (
     "(CAST(sumsq_c AS DOUBLE)"
     " - CAST(sum_c AS DOUBLE) * CAST(sum_c AS DOUBLE) / n_g) / 40000.0"
 )
+
 
 SQL_BROWN_FORSYTHE = f"""
 WITH raw AS (
@@ -790,12 +581,6 @@ SELECT k_groups, n,
        END AS f_stat
 FROM tot
 """
-
-QUERIES["q_brown_forsythe"] = Query(
-    q_brown_forsythe,
-    SQL_BROWN_FORSYTHE,
-    "Brown-Forsythe spread test, order value by priority",
-)
 
 
 def q_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -856,12 +641,6 @@ SELECT g, n,
        END AS jb
 FROM s
 """
-
-QUERIES["q_jarque_bera"] = Query(
-    q_jarque_bera,
-    SQL_JARQUE_BERA,
-    "Jarque-Bera normality per event type from exact power sums",
-)
 
 
 def q_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -947,12 +726,6 @@ SELECT g AS o_orderpriority, n_periods, n_eval,
 FROM agg
 """
 
-QUERIES["q_forecast_backtest"] = Query(
-    q_forecast_backtest,
-    SQL_FORECAST_BACKTEST,
-    "seasonal-naive monthly-revenue backtest: MAE/RMSE/WAPE/sMAPE/MASE",
-)
-
 
 def q_market_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Revenue concentration per region (operators/aggregates.py::
@@ -1019,12 +792,6 @@ SELECT r_name, n_players,
 FROM agg
 """
 
-QUERIES["q_market_concentration"] = Query(
-    q_market_concentration,
-    SQL_MARKET_CONCENTRATION,
-    "HHI / effective-N / CR4 of nation revenue shares per region",
-)
-
 
 def q_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ACF of daily order revenue at lags 1..7 (operators/windows.py::
@@ -1083,12 +850,6 @@ SELECT CAST(nums.lag AS BIGINT) AS lag, n_pairs,
        END AS acf
 FROM nums CROSS JOIN den
 """
-
-QUERIES["q_autocorr"] = Query(
-    q_autocorr,
-    SQL_AUTOCORR,
-    "daily-revenue autocorrelation at lags 1-7 via exploded equi-join",
-)
 
 
 def q_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1186,12 +947,6 @@ SELECT source, pv AS p_value, CAST(p_rank AS BIGINT) AS p_rank,
 FROM flagged CROSS JOIN kstar
 """
 
-QUERIES["q_bh_fdr"] = Query(
-    q_bh_fdr,
-    SQL_BH_FDR,
-    "BH step-up FDR over per-source language-share z screens",
-)
-
 
 def q_partial_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Partial correlation (operators/aggregates.py::
@@ -1222,6 +977,7 @@ _PC_R = {
         "ryz": ("y", "z"),
     }.items()
 }
+
 
 SQL_PARTIAL_CORR = f"""
 WITH complete AS (
@@ -1272,12 +1028,6 @@ SELECT n,
        END AS t_stat
 FROM p
 """
-
-QUERIES["q_partial_corr"] = Query(
-    q_partial_corr,
-    SQL_PARTIAL_CORR,
-    "partial corr of quantity vs price controlling discount",
-)
 
 
 def q_ols_influence(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1382,85 +1132,6 @@ WHERE n > 2 AND sxxc > 0 AND mse > 0 AND h < 1.0
   AND cooks > 4.0 / CAST(n AS DOUBLE)
 """
 
-QUERIES["q_ols_influence"] = Query(
-    q_ols_influence,
-    SQL_OLS_INFLUENCE,
-    "Cook's D influence audit of per-priority revenue trends",
-)
-
-
-def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # BM25 retrieval (llm/text.py::bm25_topk): top-10 docs for the
-    # query {merge, window, stream} under Lucene-style Okapi BM25 —
-    # the lexical half of a hybrid retriever, next to TF-IDF keywords
-    # and the dense ANN path. Per-term contributions quantize to 1e-6
-    # into a DECIMAL sum so the per-doc score (and thus the top-k SET)
-    # is partition-order-independent; the cut is orderBy+limit
-    # (TakeOrderedAndProject), no window.
-    from python_mapreduce_spark.llm.text import bm25_topk  # noqa: PLC0415
-
-    return bm25_topk(
-        table(spark, sf_dir, "documents"),
-        "doc_id",
-        "text",
-        ["merge", "window", "stream"],
-        k=10,
-    )
-
-
-SQL_BM25_TOPK = f"""
-WITH toks AS (
-  SELECT doc_id AS id,
-         unnest(regexp_extract_all(lower(coalesce(text, '')), '[a-z]+'))
-           AS term
-  FROM documents
-),
-tf AS (
-  SELECT id, term, CAST(count(*) AS BIGINT) AS tf FROM toks GROUP BY 1, 2
-),
-dl AS (SELECT id, CAST(SUM(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
-stats AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS nd, CAST(SUM(dl) AS DOUBLE) AS tok
-  FROM dl
-),
-nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
-qtf AS (SELECT * FROM tf WHERE term IN ('merge', 'window', 'stream')),
-dfreq AS (
-  SELECT term, CAST(count(*) AS BIGINT) AS df FROM qtf GROUP BY 1
-),
-j AS (
-  SELECT q.id, q.tf, d.df, l.dl, s.nd, s.tok, nn.n
-  FROM qtf q
-  JOIN dfreq d USING (term)
-  JOIN dl l ON q.id = l.id
-  CROSS JOIN stats s CROSS JOIN nn
-),
-contrib AS (
-  SELECT id, dl,
-         {sql_dround(
-             'ln(1.0 + (CAST(n AS DOUBLE) - df + 0.5) / (df + 0.5))'
-             ' * CAST(tf AS DOUBLE) * 2.2'
-             ' / (CAST(tf AS DOUBLE) + 1.2 * (0.25'
-             ' + 0.75 * CAST(dl AS DOUBLE) / (tok / CAST(nd AS DOUBLE))))',
-             6)} AS c
-  FROM j
-),
-scored AS (
-  SELECT id, CAST(COUNT(*) AS BIGINT) AS matched_terms,
-         CAST(MAX(dl) AS BIGINT) AS dl,
-         CAST(SUM(CAST(c AS DECIMAL(38,6))) AS DOUBLE) AS score_raw
-  FROM contrib GROUP BY id
-)
-SELECT id, matched_terms, dl, {sql_dround('score_raw', 4)} AS score
-FROM scored ORDER BY score_raw DESC, id ASC LIMIT 10
-"""
-
-QUERIES["q_bm25_topk"] = Query(
-    q_bm25_topk,
-    SQL_BM25_TOPK,
-    "Okapi BM25 top-10 for {merge, window, stream}",
-)
-
 
 def q_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     # t-closeness release gate (operators/aggregates.py::
@@ -1480,6 +1151,7 @@ def q_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _TC_P = "abs(CAST(nc AS DOUBLE) / CAST(n AS DOUBLE) - CAST(ng AS DOUBLE) / CAST(ntot AS DOUBLE))"
+
 
 SQL_T_CLOSENESS = f"""
 WITH cell AS (
@@ -1530,12 +1202,6 @@ SELECT n_rows, n_groups,
        n_groups_above_t = 0 AS t_close
 FROM agg
 """
-
-QUERIES["q_t_closeness"] = Query(
-    q_t_closeness,
-    SQL_T_CLOSENESS,
-    "t-closeness TVD gate on status distributions per priority-year",
-)
 
 
 def q_theil(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1612,12 +1278,6 @@ SELECT n, CAST(coalesce(nx.nx, 0) AS BIGINT) AS n_excluded, n_groups,
 FROM fin LEFT JOIN nx USING (g)
 """
 
-QUERIES["q_theil"] = Query(
-    q_theil,
-    SQL_THEIL,
-    "Theil T inequality decomposed within/between priorities",
-)
-
 
 def q_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Nelson-Aalen cumulative churn hazard (operators/events.py::
@@ -1684,12 +1344,6 @@ SELECT t AS duration, CAST(nrisk AS BIGINT) AS n_risk, d AS n_events,
          AS na_survival
 FROM s
 """
-
-QUERIES["q_nelson_aalen"] = Query(
-    q_nelson_aalen,
-    SQL_NELSON_AALEN,
-    "Nelson-Aalen cumulative churn hazard + Breslow survival",
-)
 
 
 def q_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1762,12 +1416,6 @@ SELECT k_groups, n,
 FROM f
 """
 
-QUERIES["q_kruskal_wallis"] = Query(
-    q_kruskal_wallis,
-    SQL_KRUSKAL_WALLIS,
-    "tie-corrected Kruskal-Wallis H, order value by priority",
-)
-
 
 def q_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Mann-Kendall trend + Sen's slope (operators/windows.py::
@@ -1828,228 +1476,6 @@ SELECT n_periods, n_pairs, s_stat,
        {sql_dround('sen', 6)} AS sen_slope
 FROM f
 """
-
-QUERIES["q_mann_kendall"] = Query(
-    q_mann_kendall,
-    SQL_MANN_KENDALL,
-    "Mann-Kendall trend + Sen's slope on daily revenue",
-)
-
-def q_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Hybrid retrieval via reciprocal-rank fusion (VERDICT r7 stretch
-    # item 7; llm/similarity.py::reciprocal_rank_fusion): the lexical
-    # BM25 top-20 for {merge, window, stream} fuses with the dense
-    # cosine top-20 around the vec_id=3 embedding — rank-based fusion
-    # needs no score calibration between the two ladders. Lexical ranks
-    # come from global_row_number over the emitted 1e-4 score (desc) +
-    # id tiebreak (the scalable rank primitive — no single-task
-    # window); dense ranks are cosine_topk's own rn. Both ladders are
-    # top-k-sized by contract, so the fusion stage touches ~40 rows at
-    # ANY corpus scale.
-    from pyspark.sql import Window  # noqa: PLC0415
-
-    from python_mapreduce_spark.llm.similarity import (  # noqa: PLC0415
-        cosine_topk,
-        reciprocal_rank_fusion,
-    )
-    from python_mapreduce_spark.llm.text import bm25_topk  # noqa: PLC0415
-
-    docs = table(spark, sf_dir, "documents")
-    emb = table(spark, sf_dir, "embeddings")
-    lex = bm25_topk(docs, "doc_id", "text", ["merge", "window", "stream"], k=20)
-    # lex is <= k rows BY CONTRACT (bm25_topk output is a top-k cut), so
-    # a plain row_number window over it is bounded at any corpus scale —
-    # the distributed global_row_number machinery (range checkpoint +
-    # offsets collect, ~3 blocking jobs) would buy nothing here. Same
-    # (score DESC, id ASC) total order, identical ranks.
-    lex_ranked = lex.withColumn(
-        "rank",
-        F.row_number()
-        .over(Window.orderBy(F.col("score").desc(), F.col("id").asc()))
-        .cast("long"),
-    )
-    dense = cosine_topk(
-        emb, emb.filter(F.col("vec_id") == 3), "vec_id", "embedding", k=20
-    )
-    dense_ranked = dense.select(
-        F.col("neighbor_id").alias("id"), F.col("rn").alias("rank")
-    )
-    return reciprocal_rank_fusion([lex_ranked, dense_ranked], k=10)
-
-
-SQL_HYBRID_RETRIEVAL = f"""
-WITH toks AS (
-  SELECT doc_id AS id,
-         unnest(regexp_extract_all(lower(coalesce(text, '')), '[a-z]+'))
-           AS term
-  FROM documents
-),
-tf AS (
-  SELECT id, term, CAST(count(*) AS BIGINT) AS tf FROM toks GROUP BY 1, 2
-),
-dl AS (SELECT id, CAST(SUM(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
-stats AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS nd, CAST(SUM(dl) AS DOUBLE) AS tok
-  FROM dl
-),
-nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
-qtf AS (SELECT * FROM tf WHERE term IN ('merge', 'window', 'stream')),
-dfreq AS (
-  SELECT term, CAST(count(*) AS BIGINT) AS df FROM qtf GROUP BY 1
-),
-j AS (
-  SELECT q.id, q.tf, d.df, l.dl, s.nd, s.tok, nn.n
-  FROM qtf q
-  JOIN dfreq d USING (term)
-  JOIN dl l ON q.id = l.id
-  CROSS JOIN stats s CROSS JOIN nn
-),
-contrib AS (
-  SELECT id,
-         {sql_dround(
-             'ln(1.0 + (CAST(n AS DOUBLE) - df + 0.5) / (df + 0.5))'
-             ' * CAST(tf AS DOUBLE) * 2.2'
-             ' / (CAST(tf AS DOUBLE) + 1.2 * (0.25'
-             ' + 0.75 * CAST(dl AS DOUBLE) / (tok / CAST(nd AS DOUBLE))))',
-             6)} AS c
-  FROM j
-),
-lexscored AS (
-  SELECT id, CAST(SUM(CAST(c AS DECIMAL(38,6))) AS DOUBLE) AS score_raw
-  FROM contrib GROUP BY id
-),
-lexcut AS (
-  SELECT id, {sql_dround('score_raw', 4)} AS score
-  FROM lexscored ORDER BY score_raw DESC, id ASC LIMIT 20
-),
-lexr AS (
-  SELECT id, CAST(row_number() OVER (ORDER BY score DESC, id ASC)
-                  AS BIGINT) AS r
-  FROM lexcut
-),
-e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-qv AS (SELECT v FROM e WHERE vec_id = 3),
-dsc AS (
-  SELECT c.vec_id AS id,
-         floor(list_dot_product(qv.v, c.v)
-               / (sqrt(list_dot_product(qv.v, qv.v))
-                  * sqrt(list_dot_product(c.v, c.v)))
-               * 1000000.0 + 0.5) / 1000000.0 AS cos
-  FROM e c CROSS JOIN qv WHERE c.vec_id != 3
-),
-denser AS (
-  SELECT id, r FROM (
-    SELECT id, CAST(row_number() OVER (ORDER BY cos DESC, id ASC)
-                    AS BIGINT) AS r
-    FROM dsc)
-  WHERE r <= 20
-),
-u AS (
-  SELECT id, {sql_dround('1.0 / (60.0 + CAST(r AS DOUBLE))', 8)} AS c, r
-  FROM lexr
-  UNION ALL
-  SELECT id, {sql_dround('1.0 / (60.0 + CAST(r AS DOUBLE))', 8)} AS c, r
-  FROM denser
-),
-f AS (
-  SELECT id, CAST(SUM(CAST(c AS DECIMAL(38,8))) AS DOUBLE) AS s,
-         CAST(COUNT(*) AS BIGINT) AS n_ladders,
-         CAST(MIN(r) AS BIGINT) AS best_rank
-  FROM u GROUP BY id
-)
-SELECT id, {sql_dround('s', 8)} AS rrf_score, n_ladders, best_rank
-FROM f ORDER BY s DESC, id ASC LIMIT 10
-"""
-
-QUERIES["q_hybrid_retrieval"] = Query(
-    q_hybrid_retrieval,
-    SQL_HYBRID_RETRIEVAL,
-    "RRF hybrid retrieval: BM25 lexical + dense cosine ladders",
-)
-
-
-def q_retrieval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # NDCG@5 per query label (llm/similarity.py::retrieval_ndcg):
-    # position-aware retrieval quality beside q_retrieval_eval's
-    # MRR/P@k — same exact cosine top-5 for the 50 query vectors,
-    # same-label = relevant, but every hit is credited 1/log2(rank+1)
-    # against the ideal ordering of the query's TRUE relevant pool
-    # (label count minus self). The oracle replays the identical
-    # rounded-cosine ranking, the 1e-8 gain quantization, and the
-    # cumulative ideal-gain ladder.
-    from python_mapreduce_spark.llm.similarity import retrieval_ndcg  # noqa: PLC0415
-
-    emb = table(spark, sf_dir, "embeddings")
-    return retrieval_ndcg(
-        emb, emb.filter(F.col("vec_id") < 50), "vec_id", "embedding", "label", k=5
-    )
-
-
-SQL_RETRIEVAL_NDCG = f"""
-WITH e AS (
-  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-),
-scored AS (
-  SELECT q.vec_id AS query_id, q.label AS ql,
-         c.vec_id AS neighbor_id, c.label AS cl,
-         floor(list_dot_product(q.v, c.v)
-               / (sqrt(list_dot_product(q.v, q.v))
-                  * sqrt(list_dot_product(c.v, c.v)))
-               * 1000000.0 + 0.5) / 1000000.0 AS cos
-  FROM e q JOIN e c ON q.vec_id < 50 AND c.vec_id != q.vec_id
-),
-topk AS (
-  SELECT * FROM (
-    SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rn
-    FROM scored) WHERE rn <= 5
-),
-gains AS (
-  SELECT i,
-         floor(1.0 / log2(CAST(i AS DOUBLE) + 1.0) * 100000000.0 + 0.5)
-           / 100000000.0 AS g
-  FROM generate_series(1, 5) t(i)
-),
-ideal AS (
-  SELECT i AS m,
-         CAST(SUM(CAST(g AS DECIMAL(28,8))) OVER (ORDER BY i) AS DOUBLE)
-           AS idcg
-  FROM gains
-),
-perq AS (
-  SELECT query_id, ql,
-         CAST(SUM(CASE WHEN cl IS NOT DISTINCT FROM ql
-              THEN CAST(floor(1.0 / log2(CAST(rn AS DOUBLE) + 1.0)
-                              * 100000000.0 + 0.5) / 100000000.0
-                        AS DECIMAL(28,8))
-              ELSE CAST(0 AS DECIMAL(28,8)) END) AS DOUBLE) AS dcg
-  FROM topk GROUP BY 1, 2
-),
-relc AS (SELECT label, CAST(count(*) AS BIGINT) AS c FROM e GROUP BY 1),
-pq2 AS (
-  SELECT p.query_id, p.ql, p.dcg, least(coalesce(r.c, 0) - 1, 5) AS m
-  FROM perq p LEFT JOIN relc r ON p.ql IS NOT DISTINCT FROM r.label
-),
-pq3 AS (
-  SELECT pq2.*,
-         CASE WHEN pq2.m > 0
-              THEN floor(dcg / i.idcg * 100000000.0 + 0.5) / 100000000.0
-         END AS nq
-  FROM pq2 LEFT JOIN ideal i ON pq2.m = i.m
-)
-SELECT ql AS label, CAST(count(*) AS BIGINT) AS n_queries,
-       CAST(count(nq) AS BIGINT) AS n_evaluable,
-       {sql_dround(
-           'CAST(SUM(CAST(nq AS DECIMAL(28,8))) AS DOUBLE) / count(nq)', 6)}
-         AS ndcg_at_k
-FROM pq3 GROUP BY 1
-"""
-
-QUERIES["q_retrieval_ndcg"] = Query(
-    q_retrieval_ndcg,
-    SQL_RETRIEVAL_NDCG,
-    "NDCG@5 per query label against the true relevant pool",
-)
 
 
 _CM_PROBES = ("the", "data", "merge", "window", "stream", "zzznotaterm")
@@ -2114,112 +1540,433 @@ SELECT est.term,
 FROM est LEFT JOIN ex USING (term)
 """
 
-QUERIES["q_count_min"] = Query(
-    q_count_min,
-    SQL_COUNT_MIN,
-    "count-min frequency estimates vs exact for a probe-term ladder",
-)
+
+# --- KMV (k-minimum-values) distinct sketch with set operations --------------
+
+_KMV_K = 64
+#: (k-1) * 2^60 — exactly representable as a double on both engines
+#: (k-1 has 6 significant bits), so the KMV estimate is ONE
+#: correctly-rounded IEEE division.
+_KMV_SCALE = f"({_KMV_K - 1}.0 * 1152921504606846976.0)"
+_KMV_SEG_A = "event_type = 'click' AND value > 150.0"
+_KMV_SEG_B = "event_type = 'purchase' AND value > 150.0"
 
 
-def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Synchronous min-tiebreak label propagation communities
-    # (llm/dedup.py::label_propagation) on the SAME df-capped near-dup
-    # graph as q_kcore / q_triangle_stats / q_hits — the fifth
-    # structure probe on one shared graph. The oracle unrolls the
-    # exact 4 synchronous rounds (the kcore unroll pattern): argmax by
-    # (count DESC, label ASC) is a total order, so communities match
-    # bit-for-bit.
-    from python_mapreduce_spark.llm.dedup import (  # noqa: PLC0415
-        label_propagation,
-        ngram_jaccard_pairs,
+def q_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # KMV distinct sketch (operators/aggregates.py::kmv_sketch /
+    # kmv_distinct_estimate): per event_type, the k=64 smallest 60-bit
+    # md5 hashes of the distinct user set; estimate = (k-1)/h_(k)
+    # scaled to the domain when the sketch is full, the exact count
+    # when not. Fully deterministic (pure function of the value set),
+    # so — unlike the HLL twins — the oracle replays the ESTIMATE
+    # bit-for-bit, no tolerance needed. Scale shape: one distinct agg
+    # narrows to (group, hash), then a WindowGroupLimit k-cut; the
+    # estimate runs on the <=k-row-per-group sketch frame.
+    from python_mapreduce_spark.operators.aggregates import (  # noqa: PLC0415
+        kmv_distinct_estimate,
+        kmv_sketch,
     )
 
-    docs = table(spark, sf_dir, "documents")
-    edges = ngram_jaccard_pairs(
-        docs, "doc_id", "text", threshold=0.8, max_shingle_df=100,
-        prefix_filter=True, positional_filter=True,
+    ev = table(spark, sf_dir, "events")
+    sk = kmv_sketch(ev, "user_id", group_by=["event_type"], k=_KMV_K)
+    est = kmv_distinct_estimate(sk, group_by=["event_type"], k=_KMV_K)
+    exact = ev.groupBy("event_type").agg(
+        F.countDistinct("user_id").cast("long").alias("n_exact")
     )
-    return label_propagation(edges, rounds=4)
-
-
-def _sql_label_propagation(rounds: int = 4) -> str:
-    from python_mapreduce_spark.registry.llm import _SQL_SHINGLES  # noqa: PLC0415
-
-    parts = [
-        f"""WITH {_SQL_SHINGLES.strip()},
-posts0 AS (SELECT id, unnest(shingles) AS shingle FROM sets WHERE len(shingles) > 0),
-posts AS (
-  SELECT id, shingle FROM posts0
-  WHERE shingle IN (SELECT shingle FROM posts0 GROUP BY shingle HAVING count(*) <= 100)
-),
-sizes AS (SELECT id, CAST(count(*) AS BIGINT) AS sz FROM posts GROUP BY id),
-inter AS (
-  SELECT a.id AS id1, b.id AS id2, count(*) AS i
-  FROM posts a JOIN posts b ON a.shingle = b.shingle AND a.id < b.id
-  GROUP BY 1, 2
-),
-e0 AS MATERIALIZED (
-  SELECT id1 AS a, id2 AS b FROM (
-    SELECT id1, id2,
-           floor(CAST(i AS DOUBLE) / (sa.sz + sb.sz - i) * 10000.0 + 0.5) / 10000.0
-             AS jaccard
-    FROM inter JOIN sizes sa ON id1 = sa.id JOIN sizes sb ON id2 = sb.id
-  ) WHERE jaccard >= 0.8
-),
-sym AS MATERIALIZED (
-  SELECT a, b FROM (
-    SELECT a, b FROM e0 UNION ALL SELECT b AS a, a AS b FROM e0
-  ) WHERE a != b GROUP BY a, b
-),
-l0 AS MATERIALIZED (SELECT DISTINCT a AS node, a AS label FROM sym)"""
-    ]
-    for r in range(rounds):
-        parts.append(
-            f""",
-cnt{r} AS (
-  SELECT s.a, l.label AS nbl, CAST(count(*) AS BIGINT) AS c
-  FROM sym s JOIN l{r} l ON s.b = l.node GROUP BY 1, 2
-),
-l{r + 1} AS MATERIALIZED (
-  SELECT a AS node, nbl AS label FROM (
-    SELECT a, nbl,
-           row_number() OVER (PARTITION BY a ORDER BY c DESC, nbl) AS rn
-    FROM cnt{r}
-  ) WHERE rn = 1
-)"""
-        )
-    parts.append(
-        f"""
-SELECT label AS community, CAST(count(*) AS BIGINT) AS n_nodes
-FROM l{rounds} GROUP BY 1"""
+    return exact.join(est, "event_type").select(
+        "event_type", "n_exact", "n_kmv", "sketch_full"
     )
-    return "".join(parts)
 
 
-SQL_LABEL_PROPAGATION = _sql_label_propagation()
-
-QUERIES["q_label_propagation"] = Query(
-    q_label_propagation,
-    SQL_LABEL_PROPAGATION,
-    "LPA communities on the near-dup graph via 4 unrolled sync rounds",
+SQL_KMV_DISTINCT = f"""
+WITH hashes AS (
+  SELECT DISTINCT event_type,
+         CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15)) AS BIGINT) AS h
+  FROM events WHERE user_id IS NOT NULL
+),
+sk AS (
+  SELECT event_type, h FROM (
+    SELECT event_type, h,
+           row_number() OVER (PARTITION BY event_type ORDER BY h) AS rn
+    FROM hashes
+  ) WHERE rn <= {_KMV_K}
+),
+agg AS (
+  SELECT event_type, CAST(count(*) AS BIGINT) AS n, max(h) AS hk
+  FROM sk GROUP BY event_type
+),
+est AS (
+  SELECT event_type,
+         floor((CASE WHEN n >= {_KMV_K}
+                     THEN {_KMV_SCALE} / CAST(hk AS DOUBLE)
+                     ELSE CAST(n AS DOUBLE) END) * 10000.0 + 0.5) / 10000.0 AS n_kmv,
+         n >= {_KMV_K} AS sketch_full
+  FROM agg
+),
+exact AS (
+  SELECT event_type, CAST(count(DISTINCT user_id) AS BIGINT) AS n_exact
+  FROM events GROUP BY event_type
 )
+SELECT exact.event_type, n_exact, n_kmv, sketch_full
+FROM exact JOIN est USING (event_type)
+"""
 
 
-# Registration split (R8_WIRING.md): batch 1 registers in round 8,
-# batch 2 in round 9 — the 50-slot driver window can then consume the
-# whole 23-row r02 staleness block plus the head of the r03 block in
-# round 8. ``all_queries()`` merges only BATCH1 until round 9; the
-# staged gates (tools/check_staged.py, tests/test_r8_staged_*.py) keep
-# pinning the full module either way.
-BATCH1: tuple[str, ...] = (
-    "q_anova",
-    "q_welch_ttest",
-    "q_mad_outliers",
-    "q_cusum",
-    "q_stream_cusum",
-    "q_fellegi_sunter",
-    "q_kcore",
-    "q_cramers_v",
-    "q_trimmed_mean",
+def q_kmv_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # The set-OPERATION KMV can do and HLL cannot: "distinct users in
+    # segment A AND segment B" from two <=k-row sketches
+    # (operators/aggregates.py::kmv_intersect_estimate). Union sketch =
+    # k smallest of the merged hashes (TakeOrderedAndProject, no
+    # window); within it, the both-present fraction is an unbiased
+    # Jaccard estimate, and n_inter = jaccard * n_union. The raw events
+    # are scanned once per segment at sketch time; everything after is
+    # k-row frames and broadcast joins. Exact intersection rides along
+    # for the driver to verify against.
+    from python_mapreduce_spark.operators.aggregates import (  # noqa: PLC0415
+        kmv_intersect_estimate,
+        kmv_sketch,
+    )
+
+    ev = table(spark, sf_dir, "events")
+    # Each segment feeds its sketch AND the exact-intersection ride-
+    # along (4 filtered corpus scans uncut); one cut per narrow
+    # segment frame keeps it to one scan per segment.
+    a = ev.filter(
+        (F.col("event_type") == "click") & (F.col("value") > 150.0)
+    ).select("user_id").localCheckpoint(eager=False)
+    b = ev.filter(
+        (F.col("event_type") == "purchase") & (F.col("value") > 150.0)
+    ).select("user_id").localCheckpoint(eager=False)
+    est = kmv_intersect_estimate(
+        kmv_sketch(a, "user_id", k=_KMV_K),
+        kmv_sketch(b, "user_id", k=_KMV_K),
+        k=_KMV_K,
+    )
+    exact = (
+        a.filter(F.col("user_id").isNotNull())
+        .intersect(b.filter(F.col("user_id").isNotNull()))
+        .agg(F.count(F.lit(1)).cast("long").alias("n_exact_intersect"))
+    )
+    return exact.join(F.broadcast(est))
+
+
+SQL_KMV_INTERSECT = f"""
+WITH ha AS (
+  SELECT DISTINCT CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15)) AS BIGINT) AS h
+  FROM events WHERE {_KMV_SEG_A} AND user_id IS NOT NULL
+),
+hb AS (
+  SELECT DISTINCT CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15)) AS BIGINT) AS h
+  FROM events WHERE {_KMV_SEG_B} AND user_id IS NOT NULL
+),
+ska AS (SELECT h FROM ha ORDER BY h LIMIT {_KMV_K}),
+skb AS (SELECT h FROM hb ORDER BY h LIMIT {_KMV_K}),
+merged AS (
+  SELECT coalesce(ska.h, skb.h) AS h,
+         ska.h IS NOT NULL AS in_a, skb.h IS NOT NULL AS in_b
+  FROM ska FULL OUTER JOIN skb ON ska.h = skb.h
+),
+u AS (SELECT * FROM merged ORDER BY h LIMIT {_KMV_K}),
+stats AS (
+  SELECT CAST(count(*) AS BIGINT) AS n, max(h) AS hk,
+         CAST(coalesce(sum(CASE WHEN in_a AND in_b THEN 1 ELSE 0 END), 0) AS BIGINT) AS nboth
+  FROM u
+),
+est AS (
+  SELECT
+    floor((CASE WHEN n >= {_KMV_K} THEN {_KMV_SCALE} / CAST(hk AS DOUBLE)
+                ELSE CAST(n AS DOUBLE) END) * 10000.0 + 0.5) / 10000.0 AS n_union_kmv,
+    CASE WHEN n > 0 THEN
+      floor((CAST(nboth AS DOUBLE) / CAST(n AS DOUBLE))
+            * (CASE WHEN n >= {_KMV_K} THEN {_KMV_SCALE} / CAST(hk AS DOUBLE)
+                    ELSE CAST(n AS DOUBLE) END) * 10000.0 + 0.5) / 10000.0
+    END AS n_intersect_kmv,
+    CASE WHEN n > 0 THEN
+      floor(CAST(nboth AS DOUBLE) / CAST(n AS DOUBLE) * 10000.0 + 0.5) / 10000.0
+    END AS jaccard_kmv
+  FROM stats
+),
+exact AS (
+  SELECT CAST(count(*) AS BIGINT) AS n_exact_intersect FROM (
+    SELECT user_id FROM events WHERE {_KMV_SEG_A} AND user_id IS NOT NULL
+    INTERSECT
+    SELECT user_id FROM events WHERE {_KMV_SEG_B} AND user_id IS NOT NULL
+  )
 )
-BATCH2: tuple[str, ...] = tuple(n for n in QUERIES if n not in BATCH1)
+SELECT n_exact_intersect, n_union_kmv, n_intersect_kmv, jaccard_kmv FROM exact, est
+"""
+
+
+# --- deterministic Poisson-bootstrap confidence interval ---------------------
+
+_BOOT_R = 40
+
+
+def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # RNG-free percentile bootstrap for the mean order value
+    # (operators/aggregates.py::bootstrap_mean_ci): replicate weights
+    # are Poisson(1) draws by inverse-CDF over md5(id|r) — pure integer
+    # comparisons, identical on both engines, so the oracle replays the
+    # interval EXACTLY (no tolerance). One scan fans rows to R=40
+    # (replicate, weighted-cents) pairs; ONE map-side-combined agg
+    # leaves 40 rows of integer-cent DECIMAL sums; the percentile runs
+    # over the 40-row means frame (sort-based — no order-dependent
+    # float accumulation).
+    from python_mapreduce_spark.operators.aggregates import bootstrap_mean_ci  # noqa: PLC0415
+
+    o = table(spark, sf_dir, "orders")
+    return bootstrap_mean_ci(o, "o_totalprice", "o_orderkey", replicates=_BOOT_R)
+
+
+def _sql_bootstrap_ci() -> str:
+    from python_mapreduce_spark.operators.aggregates import _BOOT_POISSON_CUTS  # noqa: PLC0415
+
+    wt = " + ".join(
+        f"(CASE WHEN u >= {cut} THEN 1 ELSE 0 END)" for cut in _BOOT_POISSON_CUTS
+    )
+    return f"""
+WITH vals AS (
+  SELECT CAST(o_orderkey AS VARCHAR) AS id,
+         CAST(floor(CAST(o_totalprice AS DOUBLE) * 100.0 + 0.5) AS DECIMAL(28,0)) AS cents
+  FROM orders WHERE o_totalprice IS NOT NULL
+),
+fanned AS (
+  SELECT id, cents, r FROM vals, (SELECT unnest(range({_BOOT_R})) AS r)
+),
+weighted AS (
+  SELECT cents, r, CAST(({wt}) AS BIGINT) AS wt FROM (
+    SELECT cents, r,
+           CAST(('0x' || substr(md5(id || '|' || CAST(r AS VARCHAR)), 1, 13)) AS BIGINT) AS u
+    FROM fanned
+  )
+),
+rep AS (
+  SELECT r, CAST(sum(cents * wt) AS DECIMAL(38,0)) AS s, CAST(sum(wt) AS BIGINT) AS n
+  FROM weighted GROUP BY r
+),
+means AS (
+  SELECT CASE WHEN n > 0 THEN CAST(s AS DOUBLE) / CAST(n AS DOUBLE) / 100.0 END AS m
+  FROM rep
+),
+ci AS (SELECT quantile_cont(m, [0.025, 0.975]) AS q FROM means),
+base AS (
+  SELECT CAST(count(*) AS BIGINT) AS n_rows,
+         CASE WHEN count(*) > 0 THEN
+           floor(CAST(sum(cents) AS DOUBLE) / CAST(count(*) AS DOUBLE) / 100.0
+                 * 10000.0 + 0.5) / 10000.0
+         END AS mean_full
+  FROM vals
+)
+SELECT n_rows, mean_full,
+       floor(q[1] * 10000.0 + 0.5) / 10000.0 AS ci_lo,
+       floor(q[2] * 10000.0 + 0.5) / 10000.0 AS ci_hi
+FROM base, ci
+"""
+
+
+SQL_BOOTSTRAP_CI = _sql_bootstrap_ci()
+
+
+def q_bootstrap_diff_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Two-sample uplift with uncertainty (operators/aggregates.py::
+    # bootstrap_diff_ci): percentile-bootstrap CI for mean(click value)
+    # - mean(view value) — the continuous-metric companion to
+    # q_ab_test's two-proportion z. Same RNG-free discipline: Poisson
+    # weights by md5 inverse-CDF, ONE map-side-combined agg to R=40
+    # DECIMAL sufficient sums per side (conditional sums split the
+    # groups inside the same pass), sort-based percentile over the
+    # 40 resampled differences. The oracle replays the interval and
+    # the significance verdict exactly.
+    from python_mapreduce_spark.operators.aggregates import bootstrap_diff_ci  # noqa: PLC0415
+
+    ev = table(spark, sf_dir, "events")
+    return bootstrap_diff_ci(
+        ev, "value", "event_id", "event_type", "click", "view", replicates=_BOOT_R
+    )
+
+
+def _sql_bootstrap_diff_ci() -> str:
+    from python_mapreduce_spark.operators.aggregates import _BOOT_POISSON_CUTS  # noqa: PLC0415
+
+    wt = " + ".join(
+        f"(CASE WHEN u >= {cut} THEN 1 ELSE 0 END)" for cut in _BOOT_POISSON_CUTS
+    )
+    return f"""
+WITH vals AS (
+  SELECT CAST(event_id AS VARCHAR) AS id,
+         event_type = 'click' AS is_a,
+         CAST(floor(CAST(value AS DOUBLE) * 100.0 + 0.5) AS DECIMAL(28,0)) AS cents
+  FROM events
+  WHERE event_type IN ('click', 'view') AND value IS NOT NULL
+),
+fanned AS (
+  SELECT id, is_a, cents, r FROM vals, (SELECT unnest(range({_BOOT_R})) AS r)
+),
+weighted AS (
+  SELECT is_a, cents, r, CAST(({wt}) AS BIGINT) AS wt FROM (
+    SELECT is_a, cents, r,
+           CAST(('0x' || substr(md5(id || '|' || CAST(r AS VARCHAR)), 1, 13)) AS BIGINT) AS u
+    FROM fanned
+  )
+),
+rep AS (
+  SELECT r,
+         CAST(sum(CASE WHEN is_a THEN cents * wt ELSE 0 END) AS DECIMAL(38,0)) AS sa,
+         CAST(sum(CASE WHEN is_a THEN wt ELSE 0 END) AS BIGINT) AS na,
+         CAST(sum(CASE WHEN NOT is_a THEN cents * wt ELSE 0 END) AS DECIMAL(38,0)) AS sb,
+         CAST(sum(CASE WHEN NOT is_a THEN wt ELSE 0 END) AS BIGINT) AS nb
+  FROM weighted GROUP BY r
+),
+diffs AS (
+  SELECT CASE WHEN na > 0 AND nb > 0 THEN
+           CAST(sa AS DOUBLE) / CAST(na AS DOUBLE) / 100.0
+           - CAST(sb AS DOUBLE) / CAST(nb AS DOUBLE) / 100.0
+         END AS d
+  FROM rep
+),
+ci AS (
+  SELECT floor(q[1] * 10000.0 + 0.5) / 10000.0 AS ci_lo,
+         floor(q[2] * 10000.0 + 0.5) / 10000.0 AS ci_hi
+  FROM (SELECT quantile_cont(d, [0.025, 0.975]) AS q FROM diffs)
+),
+base AS (
+  SELECT CAST(sum(CASE WHEN is_a THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
+         CAST(sum(CASE WHEN NOT is_a THEN 1 ELSE 0 END) AS BIGINT) AS n_b,
+         CASE WHEN sum(CASE WHEN is_a THEN 1 ELSE 0 END) > 0
+               AND sum(CASE WHEN NOT is_a THEN 1 ELSE 0 END) > 0 THEN
+           floor((CAST(sum(CASE WHEN is_a THEN cents ELSE 0 END) AS DOUBLE)
+                    / CAST(sum(CASE WHEN is_a THEN 1 ELSE 0 END) AS DOUBLE)
+                  - CAST(sum(CASE WHEN NOT is_a THEN cents ELSE 0 END) AS DOUBLE)
+                    / CAST(sum(CASE WHEN NOT is_a THEN 1 ELSE 0 END) AS DOUBLE))
+                 / 100.0 * 10000.0 + 0.5) / 10000.0
+         END AS diff_full
+  FROM vals
+)
+SELECT n_a, n_b, diff_full, ci_lo, ci_hi,
+       CASE WHEN ci_lo IS NOT NULL THEN (ci_lo > 0.0 OR ci_hi < 0.0) END AS significant
+FROM base, ci
+"""
+
+
+SQL_BOOTSTRAP_DIFF_CI = _sql_bootstrap_diff_ci()
+
+
+QUERIES: dict[str, Query] = {
+    "q_anova": Query(q_anova, SQL_ANOVA, "one-way ANOVA F across order priorities"),
+    "q_welch_ttest": Query(
+        q_welch_ttest, SQL_WELCH_TTEST, "Welch t between order-status segments"
+    ),
+    "q_mad_outliers": Query(
+        q_mad_outliers, SQL_MAD_OUTLIERS, "per-source robust z via exact median/MAD"
+    ),
+    "q_cusum": Query(q_cusum, SQL_CUSUM, "CUSUM change-point sums per event type"),
+    "q_fellegi_sunter": Query(
+        q_fellegi_sunter, SQL_FELLEGI_SUNTER, "FS linkage weights over blocked pairs"
+    ),
+    "q_cramers_v": Query(
+        q_cramers_v, SQL_CRAMERS_V, "bias-corrected Cramér's V lang vs source"
+    ),
+    "q_trimmed_mean": Query(
+        q_trimmed_mean, SQL_TRIMMED_MEAN, "exact 10%-trimmed mean per priority"
+    ),
+    "q_mannwhitney": Query(
+        q_mannwhitney,
+        SQL_MANNWHITNEY,
+        "tie-corrected Mann-Whitney U z, click vs purchase values",
+    ),
+    "q_spearman": Query(
+        q_spearman,
+        SQL_SPEARMAN,
+        "rank-free Spearman rho, order value vs order date",
+    ),
+    "q_brown_forsythe": Query(
+        q_brown_forsythe,
+        SQL_BROWN_FORSYTHE,
+        "Brown-Forsythe spread test, order value by priority",
+    ),
+    "q_jarque_bera": Query(
+        q_jarque_bera,
+        SQL_JARQUE_BERA,
+        "Jarque-Bera normality per event type from exact power sums",
+    ),
+    "q_forecast_backtest": Query(
+        q_forecast_backtest,
+        SQL_FORECAST_BACKTEST,
+        "seasonal-naive monthly-revenue backtest: MAE/RMSE/WAPE/sMAPE/MASE",
+    ),
+    "q_market_concentration": Query(
+        q_market_concentration,
+        SQL_MARKET_CONCENTRATION,
+        "HHI / effective-N / CR4 of nation revenue shares per region",
+    ),
+    "q_autocorr": Query(
+        q_autocorr,
+        SQL_AUTOCORR,
+        "daily-revenue autocorrelation at lags 1-7 via exploded equi-join",
+    ),
+    "q_bh_fdr": Query(
+        q_bh_fdr,
+        SQL_BH_FDR,
+        "BH step-up FDR over per-source language-share z screens",
+    ),
+    "q_partial_corr": Query(
+        q_partial_corr,
+        SQL_PARTIAL_CORR,
+        "partial corr of quantity vs price controlling discount",
+    ),
+    "q_ols_influence": Query(
+        q_ols_influence,
+        SQL_OLS_INFLUENCE,
+        "Cook's D influence audit of per-priority revenue trends",
+    ),
+    "q_t_closeness": Query(
+        q_t_closeness,
+        SQL_T_CLOSENESS,
+        "t-closeness TVD gate on status distributions per priority-year",
+    ),
+    "q_theil": Query(
+        q_theil,
+        SQL_THEIL,
+        "Theil T inequality decomposed within/between priorities",
+    ),
+    "q_nelson_aalen": Query(
+        q_nelson_aalen,
+        SQL_NELSON_AALEN,
+        "Nelson-Aalen cumulative churn hazard + Breslow survival",
+    ),
+    "q_kruskal_wallis": Query(
+        q_kruskal_wallis,
+        SQL_KRUSKAL_WALLIS,
+        "tie-corrected Kruskal-Wallis H, order value by priority",
+    ),
+    "q_mann_kendall": Query(
+        q_mann_kendall,
+        SQL_MANN_KENDALL,
+        "Mann-Kendall trend + Sen's slope on daily revenue",
+    ),
+    "q_count_min": Query(
+        q_count_min,
+        SQL_COUNT_MIN,
+        "count-min frequency estimates vs exact for a probe-term ladder",
+    ),
+    "q_kmv_distinct": Query(
+        q_kmv_distinct,
+        SQL_KMV_DISTINCT,
+        "KMV distinct sketch per segment: deterministic (k-1)/h_k estimate replayed bit-for-bit",
+    ),
+    "q_kmv_intersect": Query(
+        q_kmv_intersect,
+        SQL_KMV_INTERSECT,
+        "KMV set ops: union/intersection/Jaccard estimates from two k-row sketches (what HLL cannot do)",
+    ),
+    "q_bootstrap_ci": Query(
+        q_bootstrap_ci,
+        SQL_BOOTSTRAP_CI,
+        "RNG-free Poisson-bootstrap percentile CI for the mean, exactly oracle-replayable",
+    ),
+    "q_bootstrap_diff_ci": Query(
+        q_bootstrap_diff_ci,
+        SQL_BOOTSTRAP_DIFF_CI,
+        "two-sample bootstrap uplift CI (mean A - mean B) with exact-replay oracle + significance verdict",
+    ),
+}

@@ -756,6 +756,154 @@ def q_stream_incremental_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
 from python_mapreduce_spark.registry.core import SQL_AUC as _SQL_AUC  # noqa: E402
 from python_mapreduce_spark.registry.core import SQL_PSI_DRIFT as _SQL_PSI_DRIFT  # noqa: E402
 from python_mapreduce_spark.registry.core import SQL_JSD_DRIFT as _SQL_JSD_DRIFT  # noqa: E402
+# The incremental LPA and KMV passes reproduce their batch twins exactly
+# (union-additive edge state; the KMV merge law), so they share the batch
+# oracles.
+from python_mapreduce_spark.registry.llm import SQL_LABEL_PROPAGATION  # noqa: E402
+from python_mapreduce_spark.registry.stats import SQL_KMV_DISTINCT, _KMV_K  # noqa: E402
+
+
+def q_stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Streaming CUSUM monitor (streaming/windows.py::stateful_cusum):
+    # per-event-type state folded across micro-batches; the final
+    # update row per key must equal the batch prefix-form fold, which
+    # is exactly what the oracle computes.
+    from python_mapreduce_spark.session import tune  # noqa: PLC0415
+    from python_mapreduce_spark.streaming.incremental import (  # noqa: PLC0415
+        normalize_event_ts,
+        run_stream_to_memory,
+    )
+    from python_mapreduce_spark.streaming.windows import stateful_cusum  # noqa: PLC0415
+
+    tune(spark)
+    stream = normalize_event_ts(
+        _events_stream(spark, sf_dir, max_files_per_trigger=1)
+    )
+    updates = stateful_cusum(
+        stream, "event_type", ["ts", "event_id"], "value",
+        target=50.0, allowance=5.0, threshold=300.0,
+    )
+    out = run_stream_to_memory(updates, output_mode="update")
+    last = out.groupBy("event_type").agg(
+        F.max(
+            F.struct("rows_seen", "cusum_pos", "cusum_neg", "alarm")
+        ).alias("__s")
+    )
+    return last.select(
+        "event_type",
+        F.col("__s.rows_seen").alias("rows_seen"),
+        dround("__s.cusum_pos", 6).alias("cusum_pos"),
+        dround("__s.cusum_neg", 6).alias("cusum_neg"),
+        F.col("__s.alarm").alias("alarm"),
+    )
+
+
+SQL_STREAM_CUSUM = f"""
+WITH p AS (
+  SELECT event_type,
+         SUM(COALESCE(value - 50.0, 0.0) - 5.0) OVER w AS p_pos,
+         SUM(-COALESCE(value - 50.0, 0.0) - 5.0) OVER w AS p_neg,
+         row_number() OVER w AS rn,
+         COUNT(*) OVER (PARTITION BY event_type) AS n_rows
+  FROM events
+  WINDOW w AS (PARTITION BY event_type ORDER BY ts, event_id
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+),
+s AS (
+  SELECT event_type, rn, n_rows,
+         p_pos - LEAST(0.0, MIN(p_pos) OVER w2) AS s_pos,
+         p_neg - LEAST(0.0, MIN(p_neg) OVER w2) AS s_neg
+  FROM p
+  WINDOW w2 AS (PARTITION BY event_type ORDER BY rn
+                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+)
+SELECT event_type,
+       CAST(n_rows AS BIGINT) AS rows_seen,
+       {sql_dround('s_pos', 6)} AS cusum_pos,
+       {sql_dround('s_neg', 6)} AS cusum_neg,
+       (s_pos > 300.0 OR s_neg > 300.0) AS alarm
+FROM s WHERE rn = n_rows
+"""
+
+
+def q_stream_incremental_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Incremental community detection (streaming/dedup.py::
+    # incremental_label_propagation): the near-dup edge stream arrives
+    # in two waves (split by pmod(id1+id2, 2) so both waves carry edges
+    # of the same communities — the interleaving a naive
+    # per-wave-compute-then-union would get wrong); each checkpointed
+    # pass ingests ONLY the new edge files into an idempotent
+    # ingest_epoch=N partition and recomputes the fixed-round
+    # synchronous LPA over the compact edge state, checkpointing the
+    # per-node labels. The edge set is union-additive and the recompute
+    # is a pure function of it, so the final communities equal the
+    # batch LPA on ALL edges — the oracle is q_label_propagation's
+    # 4-round unroll VERBATIM. Raw text is scanned once to derive
+    # edges; the epochs touch only (a, b) pairs.
+    from python_mapreduce_spark.llm.dedup import ngram_jaccard_pairs  # noqa: PLC0415
+    from python_mapreduce_spark.streaming.dedup import (  # noqa: PLC0415
+        incremental_label_propagation,
+        read_lpa_communities,
+    )
+
+    docs = table(spark, sf_dir, "documents")
+    edges = ngram_jaccard_pairs(
+        docs, "doc_id", "text", threshold=0.8, max_shingle_df=100,
+        prefix_filter=True, positional_filter=True,
+    ).select("id1", "id2")
+    work = scratch_dir("incr_lpa")
+    in_dir, ckpt, state = (
+        os.path.join(work, "in"),
+        os.path.join(work, "ckpt"),
+        os.path.join(work, "state"),
+    )
+    edges.filter(F.pmod(F.col("id1") + F.col("id2"), F.lit(2)) == 0).write.mode(
+        "append"
+    ).parquet(in_dir)
+    incremental_label_propagation(spark, in_dir, ckpt, state)
+    edges.filter(F.pmod(F.col("id1") + F.col("id2"), F.lit(2)) == 1).write.mode(
+        "append"
+    ).parquet(in_dir)
+    incremental_label_propagation(spark, in_dir, ckpt, state)
+    return read_lpa_communities(spark, state)
+
+
+def q_stream_incremental_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Incremental DISTINCT via KMV state (streaming/incremental.py::
+    # incremental_kmv_sketch): the event stream arrives in two waves
+    # split by event_id parity, so the same user lands in BOTH — the
+    # overlap a naive additive recombination would double-count. The
+    # KMV merge law (k smallest of the union of per-epoch k-mins == k
+    # smallest of the union of the sets) restores additivity, and —
+    # unlike the HLL twin, which needs a within-5% tolerance gate —
+    # the reconstructed sketch is BIT-IDENTICAL to a batch sketch over
+    # everything, so the oracle is SQL_KMV_DISTINCT verbatim.
+    from python_mapreduce_spark.session import tune  # noqa: PLC0415
+    from python_mapreduce_spark.streaming.incremental import (  # noqa: PLC0415
+        incremental_kmv_sketch,
+        read_kmv_estimate,
+    )
+
+    tune(spark)
+    events = table(spark, sf_dir, "events")
+    work = scratch_dir("incr_kmv")
+    in_dir, ckpt, state = (
+        os.path.join(work, "in"),
+        os.path.join(work, "ckpt"),
+        os.path.join(work, "state"),
+    )
+    events.filter(F.col("event_id") % 2 == 0).write.mode("append").parquet(in_dir)
+    incremental_kmv_sketch(spark, in_dir, ckpt, ["event_type"], "user_id", state, k=_KMV_K)
+    events.filter(F.col("event_id") % 2 == 1).write.mode("append").parquet(in_dir)
+    incremental_kmv_sketch(spark, in_dir, ckpt, ["event_type"], "user_id", state, k=_KMV_K)
+
+    est = read_kmv_estimate(spark, state, ["event_type"], k=_KMV_K)
+    exact = events.groupBy("event_type").agg(
+        F.countDistinct("user_id").cast("long").alias("n_exact")
+    )
+    return exact.join(est, "event_type").select(
+        "event_type", "n_exact", "n_kmv", "sketch_full"
+    )
 
 
 QUERIES: dict[str, Query] = {
@@ -822,5 +970,18 @@ QUERIES: dict[str, Query] = {
         q_stream_incremental_dedup,
         SQL_STREAM_INCR_DEDUP,
         "incremental corpus near-dup filter (band-key state, canonical-min rule)",
+    ),
+    "q_stream_cusum": Query(
+        q_stream_cusum, SQL_STREAM_CUSUM, "streaming CUSUM monitor vs batch fold"
+    ),
+    "q_stream_incremental_lpa": Query(
+        q_stream_incremental_lpa,
+        SQL_LABEL_PROPAGATION,
+        "incremental LPA communities: per-epoch edge deltas + checkpointed labels; oracle = batch LPA on the union",
+    ),
+    "q_stream_incremental_kmv": Query(
+        q_stream_incremental_kmv,
+        SQL_KMV_DISTINCT,
+        "incremental distinct via KMV merge-law state: bit-identical to the batch sketch, exact-replay oracle",
     ),
 }

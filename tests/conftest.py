@@ -77,7 +77,6 @@ _SLOW_TESTS = {
     "test_properties.py::test_connected_components_matches_union_find",
     "test_llm_ops.py::test_triangle_stats_known_graphs",
     "test_llm_ops.py::test_fuzzy_decontamination_flags_near_dups_only",
-    "test_registry_order.py::test_lazy_window_queries_emit_atomic_columns_only",
     "test_properties.py::test_funnel_matches_python_replay",
     "test_llm_ops.py::test_leakage_safe_split_keeps_cliques_together",
     "test_properties.py::test_bloom_semi_join_equivalence_property",
@@ -111,7 +110,6 @@ _SLOW_TESTS = {
     "test_properties.py::test_cdc_chunk_dedup_matches_python_replay",
     "test_properties.py::test_spearman_matches_scipy_style_avg_rank_replay",
     "test_properties.py::test_diff_tables_matches_python_replay",
-    "test_r8_staged_oracles.py::test_staged_query_matches_oracle[q_stream_incremental_ivf_recall]",
     "test_properties.py::test_hash_split_matches_hashlib_replay",
     "test_properties.py::test_model_eval_degenerate_margins",
     "test_properties.py::test_mutual_information_matches_replay",
@@ -126,8 +124,6 @@ _SLOW_TESTS = {
 
 def pytest_collection_modifyitems(config, items):
     for item in items:
-        # nodeid relative to tests/ — entries are exact ids (the one
-        # parametrized entry carries its param so its 41 sibling params
-        # stay in the fast tier)
+        # nodeid relative to tests/ — entries are exact ids
         if item.nodeid.split("tests/")[-1] in _SLOW_TESTS:
             item.add_marker(pytest.mark.slow)

@@ -112,7 +112,7 @@ def test_scalar_subquery_shapes_reuse_exchange(spark, sf_dir, qname):
     # ReuseExchange to share the partial-agg shuffle, so the fact table
     # is scanned ONCE and no single task sees the whole rollup (the
     # unpartitioned-window alternative is a single-task funnel — see
-    # tests/test_plan_hygiene.py).
+    # the plan audit in tests/test_core_queries.py).
     from python_mapreduce_spark.plans.explain import single_partition_windows
     from python_mapreduce_spark.registry import tpch2, tpch3
 

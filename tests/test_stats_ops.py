@@ -1550,7 +1550,7 @@ def test_survival_oracles_exclude_all_null_ts_users(spark, tmp_path):
     import duckdb
 
     from python_mapreduce_spark.registry.core import QUERIES as CORE_Q
-    from python_mapreduce_spark.registry.r8_staged import QUERIES as STAGED_Q
+    from python_mapreduce_spark.registry.stats import QUERIES as STATS_Q
 
     def t(day):
         return dt.datetime(2024, 1, day, 12, 0, 0)
@@ -1578,7 +1578,7 @@ def test_survival_oracles_exclude_all_null_ts_users(spark, tmp_path):
         "CREATE VIEW events AS SELECT * FROM "
         f"'{tmp_path}/events.parquet/*.parquet'"
     )
-    for q in (CORE_Q["q_survival_curve"], STAGED_Q["q_nelson_aalen"]):
+    for q in (CORE_Q["q_survival_curve"], STATS_Q["q_nelson_aalen"]):
         sdf = q.fn(spark, str(tmp_path)).toPandas()
         odf = con.sql(q.sql).df()
         assert len(sdf) == len(odf) == 2  # two durations, no NULL row
