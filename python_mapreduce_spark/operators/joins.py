@@ -597,7 +597,7 @@ def fellegi_sunter_weights(
     # per-field-job form; string-cast grouping is injective per field
     # EXCEPT floating signed zero (raw grouping merges -0.0 with 0.0,
     # their strings differ), so float fields normalize -0.0 first —
-    # pinned by tests/test_stats_ops.py::test_fellegi_sunter_typed_u.
+    # pinned by tests/test_r8_ops.py::test_fellegi_sunter_typed_u.
     from pyspark.sql.types import DoubleType, FloatType  # noqa: PLC0415
 
     def _vstr(f: str) -> Column:

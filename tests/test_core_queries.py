@@ -3,31 +3,18 @@ DuckDB oracle comparison at sf0.001.
 
 The comparison is the one ``tools/check_oracle.py`` runs (row count +
 name-sorted columns + order-insensitive value hash). Before it runs, the
-same DataFrame's physical plan and schema are checked for the patterns
-that break scale or the comparison itself:
-
-  * ``BatchEvalPython`` - row-at-a-time (non-Arrow) Python in the plan.
-    Python is meant to run Arrow-batched only (``ArrowEvalPython`` /
-    ``MapInPandas`` / ``FlatMapGroupsInArrow``).
-  * ``CartesianProduct`` - an unconditioned cross join; theta joins plan
-    as BroadcastNestedLoopJoin with the predicate attached.
-  * a Window fed by a ``SinglePartition`` Exchange - an unpartitioned
-    ``Window.orderBy`` funnels every row through one task.
-  * array, map or struct columns (the canonicalizer sorts by every
-    column and cannot order them) and decimals wider than 18 digits
-    (Spark's toPandas yields ``decimal.Decimal`` where DuckDB yields
-    float64, and the value hash is representation-sensitive).
+same DataFrame's physical plan and schema are audited for the patterns
+that break scale or the comparison itself (row-at-a-time Python, an
+unconditioned cross join, a single-partition window, complex-typed or
+wide-decimal columns). Both checks live in ``conftest.QueryChecks``,
+which memoizes them per query for every test that asserts on them.
 """
 
 from __future__ import annotations
 
-import duckdb
 import pytest
-from pyspark.sql.types import ArrayType, DecimalType, MapType, StructType
 
 import __spark_entry__ as entrymod
-from python_mapreduce_spark.plans.explain import formatted_plan, single_partition_windows
-from tools.check_oracle import canon
 
 # Rows-only queries (no DuckDB oracle): their result is not
 # SQL-expressible. Each maps to the oracle-checked twin that pins it.
@@ -39,39 +26,6 @@ ROWS_ONLY_TWINS = {
     "q_sim_ann_lsh": "q_sim_ann_lsh_recall",
     "q_zorder_layout": "q_zorder_code",  # file extents follow range-partitioner sampling
 }
-
-# Queries allowed a Window fed by a SinglePartition Exchange:
-#   * labeled DEMO shapes whose scalable twins (q_window_rank_scalable /
-#     q_window_cume_scalable) compute the identical answer via
-#     global_row_number;
-#   * windows over frames bounded by construction at a small operator
-#     parameter, where the distributed running sum buys nothing:
-#     q_lift_gain (<= n_buckets = 10 rows) and q_heaps_law
-#     (<= buckets = 10 rows).
-SINGLE_PARTITION_WINDOW_OK = {
-    "q_window_rank_dist_demo",
-    "q_window_cume_demo",
-    "q_lift_gain",
-    "q_heaps_law",
-}
-
-# Queries allowed row-at-a-time Python, each with its reason.
-BATCH_EVAL_PYTHON_OK = {
-    # The facade's Python UDTF compatibility path (registry/mr.py):
-    # a non-Arrow UDTF plans as BatchEvalPythonUDTF.
-    "q_mr_udtf_tokens",
-}
-
-
-@pytest.fixture(scope="module")
-def duck(sf_dir):
-    from python_mapreduce_spark.sources.readers import TABLES
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    yield con
-    con.close()
 
 
 def test_entry_smoke(spark):
@@ -88,43 +42,12 @@ def test_queries_have_oracles_or_reason():
     assert set(ROWS_ONLY_TWINS.values()) <= set(oracles)
 
 
-def _audit(name, df):
-    plan = formatted_plan(df)
-    if name not in BATCH_EVAL_PYTHON_OK:
-        assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python UDF in plan"
-    assert "CartesianProduct" not in plan, f"{name}: unconditioned cross join in plan"
-    if name not in SINGLE_PARTITION_WINDOW_OK:
-        hits = single_partition_windows(df)
-        assert not hits, (
-            f"{name}: Window node(s) {hits} fed by a SinglePartition "
-            "Exchange - unpartitioned window funnels all rows through one task"
-        )
-    bad = [
-        f.name
-        for f in df.schema.fields
-        if isinstance(f.dataType, (ArrayType, MapType, StructType))
-        or (isinstance(f.dataType, DecimalType) and f.dataType.precision > 18)
-    ]
-    assert not bad, f"{name}: complex-typed or wide-decimal output columns {bad}"
-
-
 @pytest.mark.parametrize("name", sorted(entrymod.queries()))
-def test_query_matches_oracle(name, spark, sf_dir, duck):
-    df = entrymod.queries()[name](spark, sf_dir)
-    _audit(name, df)
-    sdf = df.toPandas()
-    # No comparison may pass on two empty frames; at sf0.001 every
-    # customer has orders, so only q_join_anti is legitimately empty.
-    assert len(sdf) > 0 or name == "q_join_anti", f"{name}: empty result"
-    sql = entrymod.oracle_sql().get(name)
-    if sql is None:
-        return
-    odf = duck.sql(sql).df()
-    scols, _, shash = canon(sdf)
-    ocols, _, ohash = canon(odf)
-    assert len(sdf) == len(odf), f"rowcount {len(sdf)} != {len(odf)}"
-    assert scols == ocols
-    assert shash == ohash, f"value hash mismatch for {name}"
+def test_query_matches_oracle(name, query_checks):
+    problems = query_checks.audit(name)
+    assert not problems, problems
+    problems = query_checks.oracle(name)
+    assert not problems, problems
 
 
 def test_bench_summary_line_stays_tail_window_safe():

@@ -1,104 +1,41 @@
-"""Plan-hygiene audit across the relational query registry.
+"""Plan-hygiene sweeps across the relational and llm query modules.
 
-Every query's PHYSICAL plan is checked for the three patterns that
-silently destroy 100 TB scalability:
+Every query's physical plan and output schema are audited for the
+patterns that silently destroy 100 TB scalability or the oracle
+comparison (see ``conftest.audit_problems``): row-at-a-time Python
+(``BatchEvalPython``), an unconditioned cross join
+(``CartesianProduct``), a Window fed by a ``SinglePartition`` Exchange,
+and complex-typed or wide-decimal columns. Only the named allowlists in
+``conftest.py`` are exempt.
 
-  * ``BatchEvalPython`` — a row-at-a-time (non-Arrow) Python UDF in the
-    plan. The engine's contract is that Python only ever runs Arrow-
-    batched (``ArrowEvalPython`` / ``MapInPandas`` / ``FlatMapGroupsIn
-    Pandas``), so any appearance is a regression.
-  * ``CartesianProduct`` — an unconditioned cross join. Theta joins are
-    expected to plan as BroadcastNestedLoopJoin with the predicate
-    attached; a bare cartesian means a join condition was lost.
-  * A ``SinglePartition`` Exchange feeding a Window — an unpartitioned
-    ``Window.orderBy`` funnels every row through ONE task. Only the two
-    labeled DEMO shapes may carry it; each has a scalable twin
-    (``q_window_rank_scalable`` / ``q_window_cume_scalable``) computing
-    the identical answer via ``global_row_number``.
-
-Two parametrized sweeps cover the registry: the lazily-built
-relational modules (core/extra/tpch/joins/windows) audit for free, and
-EVERY llm-module query is audited too — eager build work (collect
-query vectors, train centroids, run iterations) executes at sf0.001
-and the final DataFrame's plan is then checked identically. Only
-mr/streaming callables are exempt (they run streams / write temp
-dirs at build time; their Python stages are Arrow-batched by
-construction and covered by their own suites).
+The audit reads the DataFrame ``test_core_queries.py`` already builds
+for its oracle comparison (``conftest.QueryChecks`` memoizes it), so a
+full run builds each query once. Run alone, each sweep builds what it
+audits: the lazy relational modules at no execution cost, the llm
+module with its eager build work (collect query vectors, train
+centroids, run iterations) at sf0.001. The parametrizations read the
+modules' ``QUERIES`` at collection time, so a new query cannot skip
+its sweep.
 """
 
 from __future__ import annotations
 
 import pytest
 
-from python_mapreduce_spark.plans.explain import (
-    formatted_plan,
-    single_partition_windows,
-)
-from python_mapreduce_spark.registry import core, extra, joins, tpch2, tpch3, windows
-
-SF_DIR = "/root/testdata/sf0.001"
+from python_mapreduce_spark.registry import core, extra, joins, llm, tpch2, tpch3, windows
 
 _LAZY_MODULES = (core, extra, tpch2, tpch3, joins, windows)
 
-ALL_LAZY = [
-    (name, q) for mod in _LAZY_MODULES for name, q in mod.QUERIES.items()
-]
-
-# The only queries allowed to plan a single-partition Window:
-#   * labeled DEMO shapes whose scalable twins compute the identical
-#     answer via global_row_number;
-#   * windows over frames BOUNDED BY CONSTRUCTION at a small operator
-#     parameter, where the distributed running-sum machinery (eager
-#     range checkpoint + offsets collect, ~3 blocking jobs) buys
-#     nothing at any input scale:
-#       - q_lift_gain: cumsum over the per-bucket frame, <= n_buckets
-#         (10) rows — bucket ids are 0..n_buckets-1 by the floor rule;
-#       - q_heaps_law: two cumsums over the prefix-bucket frame,
-#         <= `buckets` (10) rows by the same rule.
-_SINGLE_PARTITION_WINDOW_DEMOS = {
-    "q_window_rank_dist_demo",
-    "q_window_cume_demo",
-    "q_lift_gain",
-}
-_BOUNDED_FRAME_WINDOWS = {"q_heaps_law"}
+_LAZY_NAMES = [name for mod in _LAZY_MODULES for name in mod.QUERIES]
 
 
-@pytest.mark.parametrize("name,q", ALL_LAZY, ids=[n for n, _ in ALL_LAZY])
-def test_plan_has_no_scale_hazards(spark, name, q):
-    df = q.fn(spark, SF_DIR)
-    plan = formatted_plan(df)
-    assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python UDF in plan"
-    assert "CartesianProduct" not in plan, f"{name}: unconditioned cross join in plan"
-    if name not in _SINGLE_PARTITION_WINDOW_DEMOS:
-        hits = single_partition_windows(df)
-        assert not hits, (
-            f"{name}: Window node(s) {hits} fed by a SinglePartition "
-            "Exchange — unpartitioned window funnels all rows through one task"
-        )
+@pytest.mark.parametrize("name", _LAZY_NAMES)
+def test_plan_has_no_scale_hazards(query_checks, name):
+    problems = query_checks.audit(name)
+    assert not problems, problems
 
 
-# EVERY llm-module query is audited — mechanically, with no hand-kept
-# list (VERDICT r7 item 4: the old 20-name _LAZY_LLM list silently went
-# stale as queries were added). Eager queries execute their build work
-# (collect query vectors, train centroids, run iterations) at sf0.001
-# during the build call — ~70 s across all 97, paid once per suite run
-# — and their FINAL DataFrame's physical plan is then audited exactly
-# like the lazy ones. A new llm query cannot skip this test: the
-# parametrization reads llm.QUERIES at collection time.
-from python_mapreduce_spark.registry import llm  # noqa: E402
-
-_LLM_NAMES = sorted(llm.QUERIES)
-
-
-@pytest.mark.parametrize("name", _LLM_NAMES)
-def test_llm_plans_have_no_scale_hazards(spark, name):
-    df = llm.QUERIES[name].fn(spark, SF_DIR)
-    plan = formatted_plan(df)
-    assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python UDF in plan"
-    assert "CartesianProduct" not in plan, f"{name}: unconditioned cross join in plan"
-    if name not in _BOUNDED_FRAME_WINDOWS:
-        hits = single_partition_windows(df)
-        assert not hits, (
-            f"{name}: Window node(s) {hits} fed by a SinglePartition "
-            "Exchange — unpartitioned window funnels all rows through one task"
-        )
+@pytest.mark.parametrize("name", sorted(llm.QUERIES))
+def test_llm_plans_have_no_scale_hazards(query_checks, name):
+    problems = query_checks.audit(name)
+    assert not problems, problems

@@ -1,90 +1,28 @@
-"""Oracle gate for the STAGED round-8 registry entries
-(registry/r8_staged.py — not yet in all_queries()): run each Spark
-query and its DuckDB oracle at sf0.001 and compare with the driver's
-exact canonicalization (sorted columns, order-insensitive value hash).
-When round 8 wires the module in, the driver sees queries that have
-already passed its own comparison.
+"""Oracle gate for the statistics and sketch family
+(``registry/stats.py``), the graph, retrieval and IVF-PQ entries of
+``registry/llm.py``, the stream_* entries of ``registry/streaming.py``
+that pair with them, and the library-only queries in
+``gate_queries.py``: each Spark query against its DuckDB oracle at
+sf0.001, with the comparison ``tools/check_oracle.py`` runs (row count,
+name-sorted columns, order-insensitive value hash). Rows-only entries
+must emit rows.
+
+Registered entries read the memoized outcome of their oracle test in
+``test_core_queries.py`` (``conftest.QueryChecks``), so a full run
+builds and compares each query once.
 """
 
 from __future__ import annotations
 
-import hashlib
-import math
-from datetime import date, datetime
-
-import duckdb
-import numpy as np
-import pandas as pd
 import pytest
 
-from python_mapreduce_spark.registry.r8_staged import QUERIES as R8_QUERIES
-from python_mapreduce_spark.registry.r9_staged import QUERIES as R9_QUERIES
-from python_mapreduce_spark.registry.r10_staged import QUERIES as R10_QUERIES
-from python_mapreduce_spark.sources.readers import TABLES
+from gate_queries import GRAPH_RETRIEVAL_ANN, LIBRARY_QUERIES, STREAMING
+from python_mapreduce_spark.registry import stats
 
-# One standing gate over every staged module — r8's and r9's entries
-# are all registered now but stay pinned here; r10's pre-verify ahead
-# of their round-11 registration.
-QUERIES = {**R8_QUERIES, **R9_QUERIES, **R10_QUERIES}
+CHECKED = sorted({*stats.QUERIES, *GRAPH_RETRIEVAL_ANN, *STREAMING, *LIBRARY_QUERIES})
 
 
-def _cell(v) -> str:
-    # Mirror of tools/check_oracle.py::_cell (engine-neutral canon).
-    if v is None:
-        return "NULL"
-    if isinstance(v, float) and math.isnan(v):
-        return "NULL"
-    if isinstance(v, (np.floating, float)):
-        f = float(v)
-        if f == 0:
-            return "0.0"
-        if f.is_integer() and abs(f) < 2**53:
-            return str(int(f))
-        return repr(f)
-    if isinstance(v, (np.integer, int)) and not isinstance(v, bool):
-        return str(int(v))
-    if isinstance(v, (pd.Timestamp, datetime)):
-        return pd.Timestamp(v).isoformat()
-    if isinstance(v, date):
-        return v.isoformat()
-    return str(v)
-
-
-def _canon(df: pd.DataFrame) -> tuple[list[str], str]:
-    cols = sorted(df.columns)
-    rows = sorted(
-        "|".join(_cell(v) for v in rec)
-        for rec in df[cols].itertuples(index=False, name=None)
-    )
-    return cols, hashlib.sha256("\n".join(rows).encode()).hexdigest()[:16]
-
-
-SF_DIR = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(scope="module")
-def oracle_con():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
-    return con
-
-
-@pytest.mark.parametrize("name", sorted(QUERIES))
-def test_staged_query_matches_oracle(spark, oracle_con, name):
-    q = QUERIES[name]
-    if q.sql is None:
-        # rows-only by design (raw ANN result sets) — gated by a
-        # hash-green twin; here just pin that it runs and emits rows
-        # with the contract schema.
-        df = q.fn(spark, SF_DIR)
-        assert df.count() > 0
-        return
-    sdf = q.fn(spark, SF_DIR).toPandas()
-    odf = oracle_con.sql(q.sql).df()
-    assert len(sdf) == len(odf), f"rowcount {len(sdf)} vs {len(odf)}"
-    scols, shash = _canon(sdf)
-    ocols, ohash = _canon(odf)
-    assert scols == ocols
-    assert shash == ohash, f"value-hash mismatch for {name}"
-    assert len(sdf) > 0
+@pytest.mark.parametrize("name", CHECKED)
+def test_staged_query_matches_oracle(query_checks, name):
+    problems = query_checks.oracle(name, LIBRARY_QUERIES.get(name))
+    assert not problems, problems

@@ -1,49 +1,30 @@
-"""Plan-hygiene audit for EVERY staged registry module (r8/r9/r10) —
-the same three scale-hazard checks the registered set gets in
-test_plan_hygiene.py (row-at-a-time Python, unconditioned cross join,
-single-partition window), applied BEFORE the entries earn a registry
-slot. Entries with eager build work (counting passes, PQ codebook
-training, query-vector collects) execute it at build time; the audit
-inspects the final DataFrame's physical plan, where the
-distributed-rank scheme shows as per-partition windows keyed on the
-partition id, never a SinglePartition exchange.
+"""Plan audit for the statistics and sketch family (``registry/stats.py``),
+the graph, retrieval and IVF-PQ entries of ``registry/llm.py``, and the
+library-only Ed-Join query (``gate_queries.py``): the same checks
+every registered query gets in ``test_core_queries.py`` (see
+``conftest.audit_problems``). Entries with eager build work (counting
+passes, PQ codebook training, query-vector collects) execute it at
+build time; the audit inspects the final DataFrame's physical plan,
+where the distributed-rank scheme shows as per-partition windows keyed
+on the partition id, never a SinglePartition exchange.
 
-The stream_* entries are excluded: building them runs a Structured
-Streaming query over temp-dir state (their scale shapes are pinned by
-the streaming suites instead). New staged modules join AUDITED by
-construction — the comprehension reads every module's QUERIES.
+Registered entries read the memoized build (``conftest.QueryChecks``),
+so a full run builds each query once. The stream_* entries are left to
+the streaming suites: building them runs a Structured Streaming query
+over temp-dir state.
 """
 
 from __future__ import annotations
 
 import pytest
 
-from python_mapreduce_spark.plans.explain import (
-    formatted_plan,
-    single_partition_windows,
-)
-from python_mapreduce_spark.registry import r8_staged, r9_staged, r10_staged
+from gate_queries import GRAPH_RETRIEVAL_ANN, LIBRARY_QUERIES
+from python_mapreduce_spark.registry import stats
 
-SF_DIR = "/root/testdata/sf0.001"
-
-_STAGED_MODULES = (r8_staged, r9_staged, r10_staged)
-
-AUDITED = [
-    (name, q)
-    for mod in _STAGED_MODULES
-    for name, q in mod.QUERIES.items()
-    if not name.startswith("q_stream_")
-]
+AUDITED = [*stats.QUERIES, *GRAPH_RETRIEVAL_ANN, "q_edit_distance_pairs"]
 
 
-@pytest.mark.parametrize("name,q", AUDITED, ids=[n for n, _ in AUDITED])
-def test_staged_plan_has_no_scale_hazards(spark, name, q):
-    df = q.fn(spark, SF_DIR)
-    plan = formatted_plan(df)
-    assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python UDF in plan"
-    assert "CartesianProduct" not in plan, f"{name}: unconditioned cross join in plan"
-    hits = single_partition_windows(df)
-    assert not hits, (
-        f"{name}: Window node(s) {hits} fed by a SinglePartition "
-        "Exchange — unpartitioned window funnels all rows through one task"
-    )
+@pytest.mark.parametrize("name", AUDITED)
+def test_staged_plan_has_no_scale_hazards(query_checks, name):
+    problems = query_checks.audit(name, LIBRARY_QUERIES.get(name))
+    assert not problems, problems
