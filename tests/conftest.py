@@ -76,7 +76,8 @@ def duck(sf_dir):
 # The audit flags the patterns that break scale or the comparison:
 #   * ``BatchEvalPython`` - row-at-a-time (non-Arrow) Python in the plan.
 #     Python is meant to run Arrow-batched only (``ArrowEvalPython`` /
-#     ``MapInPandas`` / ``FlatMapGroupsInArrow``).
+#     ``MapInPandas`` / ``MapInArrow`` / ``FlatMapGroupsInArrow``), with no
+#     exemption.
 #   * ``CartesianProduct`` - an unconditioned cross join; theta joins
 #     plan as BroadcastNestedLoopJoin with the predicate attached.
 #   * a Window fed by a ``SinglePartition`` Exchange - an unpartitioned
@@ -101,13 +102,6 @@ SINGLE_PARTITION_WINDOW_OK = {
     "q_heaps_law",
 }
 
-# Queries allowed row-at-a-time Python, each with its reason.
-BATCH_EVAL_PYTHON_OK = {
-    # The facade's Python UDTF compatibility path (registry/mr.py):
-    # a non-Arrow UDTF plans as BatchEvalPythonUDTF.
-    "q_mr_udtf_tokens",
-}
-
 # No comparison may pass on two empty frames; at sf0.001 every customer
 # has orders, so only q_join_anti is legitimately empty.
 EMPTY_OK = {"q_join_anti"}
@@ -120,7 +114,7 @@ def audit_problems(name, df) -> list[str]:
 
     problems = []
     plan = formatted_plan(df)
-    if "BatchEvalPython" in plan and name not in BATCH_EVAL_PYTHON_OK:
+    if "BatchEvalPython" in plan:
         problems.append(f"{name}: row-at-a-time Python UDF in plan")
     if "CartesianProduct" in plan:
         problems.append(f"{name}: unconditioned cross join in plan")

@@ -205,7 +205,7 @@ def test_reduce_groups_streaming_matches_agg(spark, tables):
     import pickle
     import warnings
 
-    from python_mapreduce_spark.mapreduce import reduce_groups_streaming
+    from python_mapreduce_spark.mapreduce import flat_map, reduce_groups
     from python_mapreduce_spark.plans.explain import formatted_plan
 
     li = tables["lineitem"].select("l_returnflag", "l_quantity", "l_extendedprice")
@@ -232,7 +232,7 @@ def test_reduce_groups_streaming_matches_agg(spark, tables):
     try:
         with warnings.catch_warnings(record=True) as caught:
             warnings.simplefilter("always")
-            got = reduce_groups_streaming(
+            got = reduce_groups(
                 li,
                 "l_returnflag",
                 fn,
@@ -247,15 +247,16 @@ def test_reduce_groups_streaming_matches_agg(spark, tables):
     assert g == e
 
     # Row contract: fn sees each row's non-key values as the same Python
-    # values collect() gives (timestamps as the same instant, UTC-aware).
+    # values collect() gives (timestamps as the same instant, tz-aware),
+    # a null bigint as None, not nan.
     df = spark.sql(
         """SELECT * FROM VALUES
         ('a', 1L, 1.5D, CAST(1.25 AS DECIMAL(10,2)), DATE'2020-01-02',
-         TIMESTAMP'2020-01-02 03:04:05', 'x', array(1, 2)),
+         TIMESTAMP'2020-01-02 03:04:05', 'x', true, array(1, 2)),
         ('a', CAST(NULL AS BIGINT), CAST('NaN' AS DOUBLE), CAST(-3.5 AS DECIMAL(10,2)),
-         DATE'2020-01-02', TIMESTAMP'1999-12-31 23:59:59.5', NULL, array()),
-        ('b', 7L, CAST(NULL AS DOUBLE), NULL, DATE'2021-06-30', NULL, 'z', NULL)
-        AS t(k, i, d, dec, dt, ts, s, arr)"""
+         DATE'2020-01-02', TIMESTAMP'1999-12-31 23:59:59.5', NULL, NULL, array()),
+        ('b', 7L, CAST(NULL AS DOUBLE), NULL, DATE'2021-06-30', NULL, 'z', false, NULL)
+        AS t(k, i, d, dec, dt, ts, s, flag, arr)"""
     )
 
     def norm(v):
@@ -265,15 +266,31 @@ def test_reduce_groups_streaming_matches_agg(spark, tables):
             return v.astimezone(datetime.timezone.utc)
         return v
 
+    def decoded(rows):
+        return sorted((r.k, repr(tuple(map(norm, pickle.loads(r.row))))) for r in rows)
+
     def echo(key, rows, aux):
         return [(key[0], pickle.dumps(row)) for row in rows]
 
-    seen = reduce_groups_streaming(df, "k", echo, "k string, row binary").collect()
-    got_rows = sorted(
-        (r.k, repr(tuple(map(norm, pickle.loads(r.row))))) for r in seen
-    )
     exp_rows = sorted((r.k, repr(tuple(map(norm, tuple(r)[1:])))) for r in df.collect())
-    assert got_rows == exp_rows
+    seen = reduce_groups(df, "k", echo, "k string, row binary").collect()
+    assert decoded(seen) == exp_rows
+
+    # The map phase decodes the same way. One-row batches give the first
+    # row's columns null-free (numpy branch) and the second row's nulls
+    # a batch of their own; one 3-row batch has nulls in most columns.
+    mapped = flat_map(
+        df.coalesce(1), lambda row, aux: [(row[0], pickle.dumps(row[1:]))], "k string, row binary"
+    )
+    assert "MapInArrow" in formatted_plan(mapped)
+    for size in ("1", old):
+        spark.conf.set(conf, size)
+        try:
+            rows = mapped.collect()
+        finally:
+            spark.conf.set(conf, old)
+        assert decoded(rows) == exp_rows
+        assert None in {pickle.loads(r.row)[0] for r in rows}  # the null bigint
 
     # A two-column key arrives as Python natives; a group may emit
     # nothing, and an all-None output column keeps its declared type.
@@ -283,13 +300,13 @@ def test_reduce_groups_streaming_matches_agg(spark, tables):
         kinds = ",".join(type(k).__name__ for k in key)
         return [(key[0], key[1], kinds, sum(1 for _ in rows), None)]
 
-    out = reduce_groups_streaming(
+    out = reduce_groups(
         df, ["k", "dt"], keyed, "k string, dt date, kinds string, n long, nothing double"
     ).collect()
     assert [tuple(r) for r in out] == [("a", datetime.date(2020, 1, 2), "str,date", 2, None)]
 
     # With no value columns every row still arrives, as an empty tuple.
-    counts = reduce_groups_streaming(
+    counts = reduce_groups(
         df.select("k"), "k", lambda key, rows, aux: [(key[0], len(list(rows)))], "k string, n long"
     ).collect()
     assert sorted(map(tuple, counts)) == [("a", 2), ("b", 1)]
@@ -401,27 +418,34 @@ def test_run_mapreduce_accepts_function_names(spark, tmp_path):
     # Whole-job O7 parity: map/reduce hooks given as 'module:function'
     # strings resolved from a project dir, reference project layout.
     import sys
+    from decimal import Decimal
 
     from python_mapreduce_spark.mapreduce import run_mapreduce
 
     proj = tmp_path / "proj2"
     proj.mkdir()
     (proj / "wc_fns.py").write_text(
+        "from decimal import Decimal\n"
         "def map_words(line, aux):\n"
-        "    return [(w, 1) for w in line.split()]\n"
-        "def reduce_count(key, pdf, aux):\n"
-        "    return [(key[0], int(pdf['n'].sum()))]\n"
+        "    return [(w, 1, Decimal('0.25')) for w in line.split()]\n"
+        "def reduce_count(key, rows, aux):\n"
+        "    ns, ws = zip(*rows)\n"
+        "    return [(key[0], sum(ns), sum(ws))]\n"
     )
     df = spark.createDataFrame([("a b a",), ("b a",)], "line string")
+    # Decimal columns in both schemas: a type with a comma in it.
     out = run_mapreduce(
         df,
         "wc_fns:map_words",
-        "word string, n long",
+        "word string, n long, w decimal(10,2)",
         "wc_fns:reduce_count",
-        "word string, total long",
+        "word string, total long, weight decimal(10,2)",
         project_dir=str(proj),
     )
-    assert {(r.word, r.total) for r in out.collect()} == {("a", 3), ("b", 2)}
+    assert {tuple(r) for r in out.collect()} == {
+        ("a", 3, Decimal("0.75")),
+        ("b", 2, Decimal("0.50")),
+    }
     assert str(proj) not in sys.path  # path cleaned up after resolution
 
 

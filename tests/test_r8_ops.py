@@ -1,7 +1,9 @@
-"""Round-8 pre-staged operators: ANOVA, CUSUM, k-core, Welch, MAD,
-Fellegi-Sunter, streaming CUSUM. Each is checked against a brute-force Python replay — the same
-discipline as test_properties.py — before it earns a registry slot and
-a DuckDB oracle next round.
+"""Replay tests for the statistics, graph and retrieval operators behind
+the registered ``stats.py`` / ``llm.py`` / ``streaming.py`` queries:
+ANOVA, CUSUM, k-core, Welch, MAD, Fellegi-Sunter, streaming CUSUM and
+more. Each is checked against a brute-force Python replay (the same
+discipline as test_properties.py); the queries they back are checked by
+the registry's oracle gate.
 """
 
 from __future__ import annotations

@@ -1,5 +1,6 @@
-"""Replay tests for the round-9 staged operators: KMV distinct sketch
-(+ set operations) and the RNG-free Poisson-bootstrap CI. Everything
+"""Replay tests for the sketch, resampling and ANN operators behind
+registered queries: KMV distinct sketch (+ set operations), the RNG-free
+Poisson-bootstrap CI and the IVF-PQ index. Everything
 here is DETERMINISTIC by construction (md5-derived), so the tests pin
 exact invariants — merge laws, partitioning invariance, estimator
 accuracy on fixed data — not statistical tolerances."""

@@ -1,7 +1,8 @@
 """Duplicate-subtree audit: parquet-scan and Python-eval counts per query.
 
 Builds every HEADLINE query's DataFrame and counts `Scan parquet`,
-`ArrowEvalPython`/`BatchEvalPython`/`MapInPandas`/`FlatMapGroupsInPandas`
+`ArrowEvalPython`/`BatchEvalPython`/`MapInPandas`/`MapInArrow`/
+`FlatMapGroupsInPandas`/`FlatMapGroupsInArrow`
 nodes in explain("formatted"). A query whose plan scans the same table
 many more times than it references distinct tables is re-running a
 shared subtree per consumer (Catalyst shares none) — the round-10
@@ -50,7 +51,7 @@ def main() -> None:
         tables = len(set(re.findall(r"InMemoryFileIndex \[([^\]]+)\]", txt)))
         pyeval = len(
             re.findall(
-                r"ArrowEvalPython|BatchEvalPython|MapInPandas|FlatMapGroupsInPandas",
+                r"ArrowEvalPython|BatchEvalPython|MapIn(Pandas|Arrow)|FlatMapGroupsIn(Pandas|Arrow)",
                 txt,
             )
         )
